@@ -14,7 +14,14 @@ pages quoting a held-out eval set whose vocabulary is disjoint from the
 corpus, so the dedup and decontamination filters each remove a known,
 non-zero count.
 
-The program only ever sees ``pages/`` (a snapshot table) and ``eval/``.
+The ``sf`` kind is a star-schema-shaped dataset for the leaf suite: one
+parquet file per table the chosen leaves read (``documents`` and
+``embeddings``), with the column names and
+types of the repository's fixture tables. Its expected outputs are the
+per-leaf row counts of the leaves' own DuckDB oracles.
+
+The program only ever sees ``pages/`` (a snapshot table), ``eval/`` and
+the ``sf`` tables.
 ``truth.parquet`` holds the generator's own answers (parsed x/y/z and
 the planted flags); the expected output digests derived from it are kept
 in ``meta.json`` for the output checks alone.
@@ -35,7 +42,7 @@ import pyarrow.parquet as pq
 
 from . import oracle
 
-GEN_VERSION = "g3"
+GEN_VERSION = "g4"
 CACHE_DIR = ".perfbench_cache"
 FAMOUS = (-76.7512345, 34.7512345)
 LANGS = np.array(["en", "es", "de", "fr"])
@@ -182,6 +189,47 @@ def sample_keep(urls, langs) -> np.ndarray:
     return out
 
 
+# the fixture tables' document vocabulary (the search ops' literal
+# queries draw their terms from it)
+SF_VOCAB = np.array(
+    "a agg batch big column customer data fast filter group hash join key line "
+    "merge order part query row scan slow small sort spark stream table the "
+    "value vector window".split())
+SF_LANGS = np.array(["en", "en", "en", "es", "fr", "zh", "de"])
+EMB_DIM = 64
+
+
+def sf_tables(n_docs: int, seed: int) -> dict[str, pd.DataFrame]:
+    """The leaf suite's tables, sized from the document count.
+
+    documents: 10-100 vocabulary words each; 5% are an earlier
+    document's text plus the word "dup". embeddings: half as many unit
+    vectors with random labels, as in the fixture tables.
+    """
+    rng = np.random.default_rng([seed, n_docs, 7])
+    n_len = rng.integers(10, 101, n_docs)
+    words = rng.choice(SF_VOCAB, size=n_len.sum())
+    text = np.array([" ".join(w) for w in np.split(words, np.cumsum(n_len)[:-1])],
+                    dtype=object)
+    near = np.flatnonzero(rng.uniform(size=n_docs) < 0.05)
+    near = near[near > 0]
+    text[near] = text[rng.integers(0, near)] + " dup"
+    docs = pd.DataFrame({
+        "doc_id": np.arange(n_docs, dtype=np.int64), "text": text,
+        "lang": SF_LANGS[rng.integers(0, len(SF_LANGS), n_docs)].astype(object),
+        "source": np.char.add("src", (np.arange(n_docs) % 20).astype(str)).astype(object),
+        "n_chars": np.array([len(t) for t in text], dtype=np.int64)})
+
+    n_emb = n_docs // 2
+    v = rng.normal(size=(n_emb, EMB_DIM))
+    v = (v / np.linalg.norm(v, axis=1, keepdims=True)).astype(np.float32)
+    embs = pd.DataFrame({"vec_id": np.arange(n_emb, dtype=np.int64),
+                         "embedding": list(v),
+                         "label": rng.integers(0, 10, n_emb).astype(np.int32)})
+
+    return {"documents": docs, "embeddings": embs}
+
+
 def _write_files(df: pd.DataFrame, out_dir: str, n_files: int) -> int:
     os.makedirs(out_dir)
     total = 0
@@ -198,25 +246,21 @@ def key(kind: str, seed: int, rows: int) -> str:
     return f"{GEN_VERSION}-{kind}-s{seed}-n{rows}"
 
 
-def ensure(root: str, kind: str, seed: int, rows: int, n_files: int = 16) -> dict:
-    """Build (once) and return the meta record of one cached input.
+def _build_sf(tmp: str, rows: int, seed: int, leaves: list[str]) -> dict:
+    """Write the sf tables into ``tmp``; return the meta fields."""
+    in_bytes = n_rows = 0
+    for name, df in sf_tables(rows, seed).items():
+        p = os.path.join(tmp, f"{name}.parquet")
+        pq.write_table(pa.Table.from_pandas(df, preserve_index=False), p,
+                       coerce_timestamps="us")
+        in_bytes += os.path.getsize(p)
+        n_rows += len(df)
+    return {"input_bytes": in_bytes, "input_rows": n_rows,
+            "expected": {"leaf_rows": oracle.leaf_rows(tmp, leaves)}}
 
-    kind: "pages" (transform input) or "curate" (planted dups/contam).
-    The returned dict carries the directory, input bytes on disk, the
-    expected output digests and, on the call that generated it, ``gen_s``.
-    """
-    from vyperdatum_spark.sources import tables
 
-    cache = os.path.join(root, CACHE_DIR)
-    d = os.path.join(cache, key(kind, seed, rows))
-    meta_p = os.path.join(d, "meta.json")
-    if os.path.exists(meta_p):
-        with open(meta_p) as f:
-            return json.load(f)
-    t0 = time.perf_counter()
-    tmp = f"{d}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
+def _build_pages(tmp: str, kind: str, rows: int, seed: int, n_files: int) -> dict:
+    """Write a pages (or curate) input into ``tmp``; return the meta fields."""
     curate = kind == "curate"
     pages, truth, eval_docs = pages_frame(
         rows, seed, dup_frac=DUP_FRAC if curate else 0.0,
@@ -227,18 +271,50 @@ def ensure(root: str, kind: str, seed: int, rows: int, n_files: int = 16) -> dic
         truth["sample_keep"] = sample_keep(pages["url"], pages["lang"])
     truth_p = os.path.join(tmp, "truth.parquet")
     pq.write_table(pa.Table.from_pandas(truth, preserve_index=False), truth_p)
-    meta = {"key": key(kind, seed, rows), "kind": kind, "seed": seed,
-            "rows": rows, "files": n_files, "input_bytes": in_bytes,
+    return {"files": n_files, "input_bytes": in_bytes, "input_rows": rows,
             "n_parsed": int(truth["x"].notna().sum()),
             "n_dup": int((truth["dup_of"] >= 0).sum()),
             "n_contam": int(truth["contam"].sum()),
             "expected": oracle.expected_digests(
                 os.path.join(tmp, "pages", "*.parquet"), truth_p, curate)}
+
+
+def ensure(root: str, kind: str, seed: int, rows: int, n_files: int = 16,
+           leaves: list[str] | None = None) -> dict:
+    """Build (once) and return the meta record of one cached input.
+
+    kind: "pages" (transform input), "curate" (planted dups/contam) or
+    "sf" (the leaf suite's tables, ``rows`` documents; ``leaves`` names
+    the leaves whose oracle row counts are expected, and is part of the
+    cache key). The returned dict carries the directory, input rows and
+    bytes on disk, the expected outputs and, on the call that generated
+    it, ``gen_s``.
+    """
+    from vyperdatum_spark.sources import tables
+
+    k = key(kind, seed, rows)
+    if kind == "sf":
+        k += "-l" + hashlib.md5(" ".join(leaves).encode()).hexdigest()[:8]
+    d = os.path.join(root, CACHE_DIR, k)
+    meta_p = os.path.join(d, "meta.json")
+    if os.path.exists(meta_p):
+        with open(meta_p) as f:
+            return json.load(f)
+    t0 = time.perf_counter()
+    tmp = f"{d}.tmp{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    meta = {"key": k, "kind": kind, "seed": seed, "rows": rows}
+    if kind == "sf":
+        meta.update(_build_sf(tmp, rows, seed, leaves))
+    else:
+        meta.update(_build_pages(tmp, kind, rows, seed, n_files))
     shutil.rmtree(d, ignore_errors=True)
     os.replace(tmp, d)
-    # register the files as a snapshot table only after the rename: the
-    # table layer records the files through relative links
-    tables.adopt_parquet_dir(os.path.join(d, "pages"), {"generator": meta["key"]})
+    if kind != "sf":
+        # register the files as a snapshot table only after the rename:
+        # the table layer records the files through relative links
+        tables.adopt_parquet_dir(os.path.join(d, "pages"), {"generator": k})
     meta["dir"] = d
     with open(meta_p + ".tmp", "w") as f:
         json.dump(meta, f)

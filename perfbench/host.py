@@ -17,9 +17,12 @@ _BURN_ITERS = 3_000_000
 def record(root: str, seed: int, sizes: dict, spark_conf: dict) -> dict:
     import pyspark
 
+    # without JAVA_TOOL_OPTIONS, which makes the JVM print a
+    # "Picked up ..." line ahead of its version
+    env = {k: v for k, v in os.environ.items() if k != "JAVA_TOOL_OPTIONS"}
     try:
         java = subprocess.run(["java", "-version"], capture_output=True, text=True,
-                              timeout=30).stderr.splitlines()[0]
+                              env=env, timeout=30).stderr.splitlines()[0]
     except (OSError, subprocess.SubprocessError, IndexError):
         java = "unknown"
     with open(os.path.join(root, "bench.py"), "rb") as f:
@@ -104,11 +107,11 @@ def _tree_rss_kb(root: int) -> int:
     return total
 
 
-def tree_cpu_s(root: int | None = None) -> float:
+def tree_cpu_s() -> float:
     """CPU seconds (user + system) used so far by this process and its
     descendants, reaped children included, so the sum only grows."""
     ticks = 0
-    for pid in _tree(root or os.getpid()):
+    for pid in _tree(os.getpid()):
         try:
             with open(f"/proc/{pid}/stat") as f:
                 v = f.read().rsplit(")", 1)[1].split()
@@ -131,10 +134,11 @@ class Clock:
 class RssSampler:
     """Peak of the summed resident memory of this Python driver and its
     descendants: the driver JVM and the JVM's Python workers. Sampled
-    every ``interval`` seconds on a background thread."""
+    every INTERVAL seconds on a background thread."""
 
-    def __init__(self, interval: float = 0.25):
-        self.interval = interval
+    INTERVAL = 0.25
+
+    def __init__(self):
         self.peak_kb = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -152,7 +156,7 @@ class RssSampler:
         self.peak_kb = max(self.peak_kb, _tree_rss_kb(os.getpid()))
 
     def _run(self) -> None:
-        while not self._stop.wait(self.interval):
+        while not self._stop.wait(self.INTERVAL):
             self.sample()
 
     @property

@@ -8,8 +8,10 @@ before the next layer reads it, inside a span named after the layer.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
+import statistics
 import time
 
 from pyspark import StorageLevel
@@ -17,13 +19,25 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from . import oracle
+from .trace import TRACE_GROUP
 
 CURATE_COLS = ["url", "lang", "cell5", "region_id", "z_out", "unc", "text"]
 READBACK_SCHEMA = ("url string, lang string, region_id string, z_out double, "
                    "unc double, text string, cell5 long")
-CKPT_BUCKETS = 4
-CKPT_FAIL_AFTER = 2
+CKPT_BUCKETS = 2
+CKPT_FAIL_AFTER = 1
 RUN_ID = "perfbench"
+# the leaf suite: the bench.HEADLINE leaves that run the search, DSIR,
+# k-means, similarity and embedding-kernel ops, each with eager jobs
+# (training, statistics or checkpoints) while its plan is built
+LEAF_OPS = {"text_bm25_topk", "dsir_weights", "ann_ivf_trained_topk"}
+
+
+def leaf_suite() -> list[str]:
+    """The leaf suite in bench.HEADLINE order."""
+    import bench
+
+    return [n for n in bench.HEADLINE if n in LEAF_OPS]
 
 
 def _pages(spark, inp: dict) -> DataFrame:
@@ -136,6 +150,20 @@ def curate_tail(spark, inp: dict, out_dir: str, work: str) -> dict:
     return obs.get
 
 
+def leaf_pass(spark, sf_dir: str, leaves: list[str]) -> dict:
+    """Build and materialize (noop sink) each leaf in turn; returns
+    each leaf's row count, observed in the materializing job."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries_extended()
+    rows = {}
+    for name in leaves:
+        obs = Observation()
+        _noop(qs[name](spark, sf_dir).observe(obs, F.count(F.lit(1)).alias("rows")))
+        rows[name] = obs.get["rows"]
+    return rows
+
+
 def checkpoint_stats(spark, out_dir: str) -> dict:
     from vyperdatum_spark.engine import checkpoint as ckpt
 
@@ -170,22 +198,37 @@ def layered_transform(spark, inp: dict, tr) -> dict:
             "engine.transform.cover_ratio": n_cov / n_parsed}
 
 
-def layered_curate_resume(spark, inp: dict, tr, work: str) -> dict:
-    """Stage; one bucket per fail_after=1 call (per-bucket times); the
-    output and metrics reads; then each curation layer."""
-    from vyperdatum_spark.engine import checkpoint as ckpt
-    from vyperdatum_spark.sources import tables
+def no_span(name: str, **attrs):
+    """The untraced stand-in for ``Tracer.span``."""
+    return contextlib.nullcontext()
 
-    out_dir = os.path.join(work, "ckpt")
-    with tr.span("engine.checkpoint.stage"):
+
+def stepwise_checkpoint(spark, inp: dict, out_dir: str, span) -> list[float]:
+    """Stage, then commit one bucket per fail_after=1 call, each step
+    inside ``span``; returns the per-bucket wall times. The traced run
+    and its untraced reference both run the checkpoint in this shape."""
+    from vyperdatum_spark.engine import checkpoint as ckpt
+
+    with span("engine.checkpoint.stage"):
         ckpt.stage_buckets(spark, _parsed(_pages(spark, inp)), out_dir, RUN_ID,
                            "url", CKPT_BUCKETS)
     buckets = []
     for b in range(CKPT_BUCKETS):
         t0 = time.perf_counter()
-        with tr.span("engine.checkpoint.bucket", bucket=b):
+        with span("engine.checkpoint.bucket", bucket=b):
             checkpoint_call(spark, inp, out_dir, fail_after=1)
         buckets.append(time.perf_counter() - t0)
+    return buckets
+
+
+def layered_curate_resume(spark, inp: dict, tr, work: str) -> dict:
+    """The stepwise checkpoint (per-bucket times); the output and
+    metrics reads; then each curation layer."""
+    from vyperdatum_spark.engine import checkpoint as ckpt
+    from vyperdatum_spark.sources import tables
+
+    out_dir = os.path.join(work, "ckpt")
+    buckets = stepwise_checkpoint(spark, inp, out_dir, tr.span)
     with tr.span("engine.checkpoint.read_output"):
         out, n_out = _mat(ckpt.read_output(spark, out_dir).select(*CURATE_COLS))
     with tr.span("engine.checkpoint.read_metrics"):
@@ -203,10 +246,9 @@ def layered_curate_resume(spark, inp: dict, tr, work: str) -> dict:
         _noop(_readback(spark, path))
     for df in (out, dd, clean, sampled):
         df.unpersist()
-    buckets.sort()
     return {
-        "engine.checkpoint.bucket_s_p50": buckets[len(buckets) // 2],
-        "engine.checkpoint.bucket_s_max": buckets[-1],
+        "engine.checkpoint.bucket_s_p50": statistics.median(buckets),
+        "engine.checkpoint.bucket_s_max": max(buckets),
         "sources.tables.commits": len(tables.current_chain(os.path.join(out_dir, "data"))),
         "sources.tables.bytes_written": dir_bytes(out_dir) + dir_bytes(path),
         "ops.dedup.dup_removed": n_out - n_dd,
@@ -214,3 +256,25 @@ def layered_curate_resume(spark, inp: dict, tr, work: str) -> dict:
         "engine.sinks.files": sum(1 for _, _, fs in os.walk(path)
                                   for f in fs if f.endswith(".parquet")),
     }
+
+
+def layered_leaves(spark, sf_dir: str, leaves: list[str], tr) -> dict:
+    """Each leaf's build (the query function's call) and execution (the
+    noop sink) in their own spans. Build runs under the job group
+    ``<TRACE_GROUP>-build-<leaf>``, so the jobs a leaf starts before its
+    materializing call are counted; execution runs under TRACE_GROUP."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries_extended()
+    sc = spark.sparkContext
+    eager = 0
+    for name in leaves:
+        build_group = f"{TRACE_GROUP}-build-{name}"
+        sc.setJobGroup(build_group, f"build {name}")
+        with tr.span(f"leaf.{name}.build"):
+            df = qs[name](spark, sf_dir)
+        eager += len(sc.statusTracker().getJobIdsForGroup(build_group))
+        sc.setJobGroup(TRACE_GROUP, f"execute {name}")
+        with tr.span(f"leaf.{name}.exec"):
+            _noop(df)
+    return {"queries.eager_jobs": eager}

@@ -44,8 +44,8 @@ def digest_cols(geo: bool, text: bool = True) -> list[Column]:
     return cols
 
 
-def digest(df: DataFrame, geo: bool, text: bool = True) -> dict:
-    return df.agg(*digest_cols(geo, text)).collect()[0].asDict()
+def digest(df: DataFrame, geo: bool) -> dict:
+    return df.agg(*digest_cols(geo)).collect()[0].asDict()
 
 
 # the same digests in DuckDB SQL
@@ -92,6 +92,29 @@ def expected_digests(pages_glob: str, truth_path: str, curate: bool) -> dict:
     return out
 
 
+def leaf_rows(sf_dir: str, leaves: list[str]) -> dict:
+    """Each leaf's row count under its own DuckDB oracle
+    (``oracle_sql_extended``) over the parquet tables in ``sf_dir``."""
+    import glob
+    import os
+
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    oracles = entry.oracle_sql_extended()
+    con = duckdb.connect()
+    try:
+        con.execute("SET enable_progress_bar = false")
+        for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+            name = os.path.basename(p)[:-len(".parquet")]
+            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
+        return {n: con.execute(f"SELECT count(*) FROM ({oracles[n]})").fetchone()[0]
+                for n in leaves}
+    finally:
+        con.close()
+
+
 def _digest_sql(con, sql: str, names: tuple) -> dict:
     row = con.execute(sql).fetchone()
     return {k: int(v) for k, v in zip(names, row)}
@@ -102,11 +125,6 @@ def compare(observed: dict, want: dict) -> list[str]:
     """One line per digest field that differs (empty when correct)."""
     return [f"{k}: got {observed.get(k)} want {v}"
             for k, v in want.items() if observed.get(k) != v]
-
-
-def check_transform(observed: dict, want: dict) -> list[str]:
-    """Byte-identical text per url and closed-form geo columns."""
-    return compare(observed, want)
 
 
 def check_curate(observed: dict, want: dict) -> list[str]:

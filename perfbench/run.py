@@ -15,6 +15,9 @@ Workloads (see BENCHMARK.json for why each was chosen):
                    half the buckets and resumed, then exact dedup,
                    decontamination, stratified sampling, cell-partitioned
                    sink and read-back
+  leaf_suite       one pass over the bench.HEADLINE leaves that run the
+                   search, DSIR, k-means, similarity and embedding-kernel
+                   ops, on seeded documents and embeddings tables
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` runs the job
 once untraced, then once with every layer materialized inside its own
@@ -38,15 +41,21 @@ import sys
 import time
 import traceback
 
-# rows of the timed jobs' input and of the warm-up job's input; the
-# generator kind sets the page mix
+# the generator kind and size of each workload's input (pages, or
+# documents for the sf kind)
 WORKLOADS = {
-    "pages_transform": {"kind": "pages", "rows": 200_000, "warm_rows": 10_000},
-    "curate_resume": {"kind": "curate", "rows": 50_000, "warm_rows": 10_000},
+    "pages_transform": {"kind": "pages", "rows": 150_000},
+    "curate_resume": {"kind": "curate", "rows": 25_000},
+    "leaf_suite": {"kind": "sf", "rows": 2_000},
 }
+WARM_ROWS = 10_000  # pages in the set-up's warm-up transform job
 DRIVER_MEMORY = "3g"
-SESSIONS = 3  # set-ups per untraced run: one fresh JVM, then restarts
-SETTLE_JOBS = 2  # untimed full-size pages_transform jobs before timing
+# untimed full-size pages_transform jobs before timing: job times fall
+# over the first five jobs of a session (150k rows: 4-6 s down to
+# 2.2-2.6 s) while the JIT compiles the generated code, whatever the
+# job's size, so timing earlier jobs measures how far warm-up got
+SETTLE_JOBS = 5
+LEAF_SETTLE_PASSES = 2  # untimed leaf passes before the traced run's reference
 MIN_TIMED_JOBS = 3  # so that one slow pages_transform job cannot move the median
 
 END_TO_END = {"rows_per_s": "1/s", "wall_s": "s", "setup_s": "s", "cpu_s": "s"}
@@ -67,6 +76,7 @@ PER_LAYER = {
     "spark.task_max_ms": "ms", "spark.shuffle_write_bytes": "bytes",
     "spark.spill_bytes": "bytes", "spark.gc_ms": "ms",
     "trace.traced_s": "s", "trace.untraced_s": "s", "trace.overhead_s": "s",
+    "queries.build_s": "s", "queries.exec_s": "s", "queries.eager_jobs": "count",
 }
 # spans whose summed duration is reported as <name>_s
 SPAN_METRICS = [
@@ -76,6 +86,14 @@ SPAN_METRICS = [
     "engine.sinks.readback", "engine.checkpoint.stage",
     "engine.checkpoint.read_output", "engine.checkpoint.read_metrics",
 ]
+
+
+def per_layer() -> dict:
+    """PER_LAYER plus each leaf's build and execution seconds."""
+    from perfbench import jobs
+
+    return {**PER_LAYER, **{f"leaf.{n}.{part}_s": "s" for n in jobs.leaf_suite()
+                            for part in ("build", "exec")}}
 
 
 def median(xs):
@@ -88,7 +106,7 @@ class Bench:
 
     def __init__(self, root: str, workload: str, seed: int, seconds: float,
                  trace: bool):
-        from perfbench import gen
+        from perfbench import gen, jobs
 
         self.workload, self.seconds, self.trace = workload, seconds, trace
         self.spec = WORKLOADS[workload]
@@ -96,15 +114,16 @@ class Bench:
         self.cache = os.path.join(root, gen.CACHE_DIR)
         self.run_tag = f"{workload}-s{seed}-t{int(trace)}-{os.getpid()}"
         self.work = os.path.join(self.cache, "work", self.run_tag)
-        self.inp = gen.ensure(root, self.spec["kind"], seed, self.spec["rows"])
-        self.warm = gen.ensure(root, self.spec["kind"], seed, self.spec["warm_rows"],
-                               n_files=4)
+        self.leaves = jobs.leaf_suite() if self.spec["kind"] == "sf" else None
+        self.inp = gen.ensure(root, self.spec["kind"], seed, self.spec["rows"],
+                              leaves=self.leaves)
+        self.warm = gen.ensure(root, "pages", seed, WARM_ROWS, n_files=4)
         self.gen_s = {m["key"]: round(m["gen_s"], 3)
                       for m in (self.inp, self.warm) if "gen_s" in m}
         if self.gen_s:
             print(f"perfbench: generated inputs in {self.gen_s} s", file=sys.stderr)
         self.spark = None
-        self.setup_samples: list[float] = []
+        self.setup_s = 0.0
         self.attempted = 0
         self.failures: list[str] = []
         self.event_dir = os.path.join(self.cache, "eventlog", self.run_tag)
@@ -123,11 +142,10 @@ class Bench:
                          "spark.eventLog.rolling.enabled": "false"})
         return conf
 
-    def start(self, cores: int, warm: bool = True) -> float:
+    def start(self, cores: int) -> float:
         """(Re)start the session and run the untimed warm-up job: the
-        transform job, which every workload starts with, on the small
-        input of the same generator. Returns the set-up time, session
-        start through warm-up."""
+        transform job on a small pages input of the same seed. Returns
+        the set-up time, session start through warm-up."""
         from perfbench import jobs
         from vyperdatum_spark.session import get_spark
 
@@ -139,8 +157,7 @@ class Bench:
         self.spark = get_spark(app_name=f"perfbench-{self.workload}", cores=cores,
                                shuffle_partitions=max(cores, 4), extra_conf=self.conf())
         self.spark.sparkContext.setLogLevel("ERROR")
-        if warm:
-            jobs.transform_job(self.spark, self.warm)
+        jobs.transform_job(self.spark, self.warm)
         return time.perf_counter() - t0
 
     def stop(self) -> None:
@@ -203,11 +220,10 @@ class Bench:
                 break
         return walls, cpus
 
-    def more_setups(self) -> None:
-        """Restart until the run holds SESSIONS set-up samples; done
-        after the timed jobs so that no restart lands between them."""
-        while len(self.setup_samples) < SESSIONS:
-            self.setup_samples.append(self.start(self.nproc))
+    def setup(self) -> None:
+        """The run's one set-up, in the fresh driver JVM: session start,
+        JVM launch and class loading through the warm-up job."""
+        self.setup_s = self.start(self.nproc)
 
     def transform_timed(self):
         """The checked, timed pages_transform job."""
@@ -219,21 +235,19 @@ class Bench:
             clock = host.Clock()
             got = jobs.transform_job(self.spark, self.inp)
             wall, cpu = clock.read()
-            return wall, cpu, self.judge("transform", oracle.check_transform(got, want))
+            return wall, cpu, self.judge("transform", oracle.compare(got, want))
         return job
 
     def run_transform(self) -> dict:
         """Timed local[nproc] jobs after SETTLE_JOBS untimed full-size
-        jobs: the JIT keeps compiling the generated code over the first
-        few full-size jobs of a session."""
+        jobs."""
         from perfbench import jobs
 
-        self.setup_samples.append(self.start(self.nproc))
+        self.setup()
         for _ in range(SETTLE_JOBS):
             jobs.transform_job(self.spark, self.inp)
         walls, cpus = self.timed_loop(self.transform_timed(), self.seconds,
                                       min_jobs=MIN_TIMED_JOBS)
-        self.more_setups()
         return {"wall": walls, "cpu": cpus, "extra": {}}
 
     def run_curate_resume(self) -> dict:
@@ -267,15 +281,34 @@ class Bench:
                         / self.inp["input_bytes"])
             return wall, cpu, self.judge("curate_resume", bad)
 
-        self.setup_samples.append(self.start(self.nproc))
+        self.setup()
         walls, cpus = self.timed_loop(job, self.seconds)
-        self.more_setups()
         n = len(phases)
         return {"wall": walls, "cpu": cpus, "extra": {
             "crash_s": (median([p[0] for p in phases]), "s", n),
             "resume_s": (median([p[1] for p in phases]), "s", n),
             "tail_s": (median([p[2] for p in phases]), "s", n),
             "write_amp": (median(amps), "ratio", len(amps))}}
+
+    def leaf_timed(self):
+        """The checked, timed leaf_suite pass."""
+        from perfbench import host, jobs, oracle
+
+        want = self.inp["expected"]["leaf_rows"]
+
+        def job():
+            clock = host.Clock()
+            got = jobs.leaf_pass(self.spark, self.inp["dir"], self.leaves)
+            wall, cpu = clock.read()
+            return wall, cpu, self.judge("leaf_suite", oracle.compare(got, want))
+        return job
+
+    def run_leaf_suite(self) -> dict:
+        """Passes from the first in the session, which compiles every
+        leaf's plans, for ``--seconds``."""
+        self.setup()
+        walls, cpus = self.timed_loop(self.leaf_timed(), self.seconds)
+        return {"wall": walls, "cpu": cpus, "extra": {}}
 
     # --------------------------------------------------------- traced run
     def run_traced(self) -> tuple[dict, dict]:
@@ -285,22 +318,27 @@ class Bench:
         from perfbench import jobs, oracle
         from perfbench.trace import TRACE_GROUP, Tracer, read_event_logs
 
-        self.setup_samples.append(self.start(self.nproc))
+        self.setup()
         tr = Tracer()
         sc = self.spark.sparkContext
-        want_geo = self.inp["expected"]["transform"]
         if self.workload == "pages_transform":
             for _ in range(SETTLE_JOBS):
                 jobs.transform_job(self.spark, self.inp)
             untraced, _, _ = self.transform_timed()()
+        elif self.workload == "leaf_suite":
+            for _ in range(LEAF_SETTLE_PASSES):
+                jobs.leaf_pass(self.spark, self.inp["dir"], self.leaves)
+            untraced, _, _ = self.leaf_timed()()
         else:
+            want_geo = self.inp["expected"]["transform"]
             want_cur = self.inp["expected"]["curate"]
+            # the traced job's shape without spans or materialization;
             # twice: the first run warms the checkpoint and curation code
             # that the set-up's transform warm-up does not reach
             for _ in range(2):
                 ref = jobs.fresh_dir(os.path.join(self.work, "reference"))
                 t0 = time.perf_counter()
-                jobs.checkpoint_call(self.spark, self.inp, ref)
+                jobs.stepwise_checkpoint(self.spark, self.inp, ref, jobs.no_span)
                 got = jobs.curate_tail(self.spark, self.inp, ref, ref)
                 untraced = time.perf_counter() - t0
             self.judge("curate_resume", oracle.check_checkpoint(
@@ -312,14 +350,17 @@ class Bench:
         with tr.span("job") as root:
             if self.workload == "pages_transform":
                 counts = jobs.layered_transform(self.spark, self.inp, tr)
+            elif self.workload == "leaf_suite":
+                counts = jobs.layered_leaves(self.spark, self.inp["dir"], self.leaves, tr)
             else:
                 counts = jobs.layered_curate_resume(self.spark, self.inp, tr, work)
         sc.setLocalProperty("spark.jobGroup.id", None)
         traced = root["end"] - root["start"]
         extra = {}
         if self.workload == "pages_transform":
-            # scaling: the same job at local[1], after its own warm-up and
-            # one settle job (generated classes are new in a new session)
+            # scaling: the same job at local[1], in a session restarted
+            # in the same JVM, after its own warm-up and one settle job
+            # (the generated classes are new in a new session)
             self.start(1)
             jobs.transform_job(self.spark, self.inp)
             walls1, _ = self.timed_loop(self.transform_timed(), 0)
@@ -329,8 +370,14 @@ class Bench:
                      "wall_s_reference": (untraced, "s", 1)}
         self.stop()
         tr.write(os.path.join(self.cache, "traces", f"{self.run_tag}.json"))
-        m = {name: 0 for name in PER_LAYER}
+        m = {name: 0 for name in per_layer()}
         m.update({f"{s}_s": tr.total(s) for s in SPAN_METRICS})
+        if self.leaves:
+            for n in self.leaves:
+                for part in ("build", "exec"):
+                    m[f"leaf.{n}.{part}_s"] = tr.total(f"leaf.{n}.{part}")
+            m["queries.build_s"] = sum(m[f"leaf.{n}.build_s"] for n in self.leaves)
+            m["queries.exec_s"] = sum(m[f"leaf.{n}.exec_s"] for n in self.leaves)
         m.update(counts)
         m.update(read_event_logs(self.event_dir))
         m.update({"trace.traced_s": traced, "trace.untraced_s": untraced,
@@ -376,7 +423,8 @@ def main(argv=None) -> int:
                 layer, extra = b.run_traced()
             else:
                 res = {"pages_transform": b.run_transform,
-                       "curate_resume": b.run_curate_resume}[args.workload]()
+                       "curate_resume": b.run_curate_resume,
+                       "leaf_suite": b.run_leaf_suite}[args.workload]()
     finally:
         b.stop()
         b.shutdown_jvm()
@@ -387,24 +435,24 @@ def main(argv=None) -> int:
     record = {"workload": args.workload, "trace": args.trace,
               "cpu_steal_frac": (steal1 - steal0) / max(total1 - total0, 1),
               "host": host.record(root, args.seed, {
-                  "rows": b.spec["rows"], "warm_rows": b.spec["warm_rows"],
-                  "input_bytes": b.inp["input_bytes"],
+                  "rows": b.spec["rows"], "warm_rows": WARM_ROWS,
+                  "input_rows": b.inp["input_rows"],
+                  "input_bytes": b.inp["input_bytes"], "leaves": b.leaves,
                   "cores": b.nproc}, b.conf()),
-              "gen_s": b.gen_s,
-              "setup_samples": b.setup_samples, "failures": b.failures}
+              "gen_s": b.gen_s, "setup_s": b.setup_s, "failures": b.failures}
     if args.trace:
-        metrics = {k: {"value": layer[k], "unit": u} for k, u in PER_LAYER.items()}
+        metrics = {k: {"value": layer[k], "unit": u} for k, u in per_layer().items()}
         if substrate is not None:
             extra["substrate_eff"] = (substrate, "ratio", 1)
         record["metrics"] = {**metrics, **{k: {"value": v, "unit": u, "n": n}
                                            for k, (v, u, n) in extra.items()}}
     else:
         walls = res["wall"]
-        rows = b.inp["rows"]
+        rows = b.inp["input_rows"]
         full = {
             "rows_per_s": (rows / median(walls) if walls else 0.0, "1/s", len(walls)),
             "wall_s": (median(walls), "s", len(walls)),
-            "setup_s": (median(b.setup_samples), "s", len(b.setup_samples)),
+            "setup_s": (b.setup_s, "s", 1),
             "cpu_s": (median(res["cpu"]), "s", len(res["cpu"])),
             "peak_rss_mb": (rss.peak_mb, "MB", 1),
             "failed_frac": (len(b.failures) / max(b.attempted, 1), "ratio", b.attempted),

@@ -51,6 +51,14 @@ def test_generator_plants_known_duplicates_and_contamination():
     assert evals["text"].str.split().map(lambda ws: all(w.startswith("zq") for w in ws)).all()
 
 
+def test_sf_tables_are_deterministic_per_seed():
+    a, b, c = gen.sf_tables(400, 5), gen.sf_tables(400, 5), gen.sf_tables(400, 6)
+    for name in a:
+        assert a[name].equals(b[name])
+    assert a["documents"]["doc_id"].is_unique and a["embeddings"]["vec_id"].is_unique
+    assert not a["documents"]["text"].equals(c["documents"]["text"])
+
+
 def test_cache_is_keyed_and_reused(tmp_path):
     m1 = gen.ensure(str(tmp_path), "pages", 4, 300, n_files=2)
     m2 = gen.ensure(str(tmp_path), "pages", 4, 300, n_files=2)
@@ -83,14 +91,14 @@ def test_transform_check_fires_on_corruption(spark, tmp_path):
     inp = gen.ensure(str(tmp_path), "pages", 21, 3000, n_files=2)
     want = inp["expected"]["transform"]
     out = jobs._transform(spark, jobs._parsed(jobs._pages(spark, inp))).cache()
-    assert oracle.check_transform(jobs.transform_job(spark, inp), want) == []
+    assert oracle.compare(jobs.transform_job(spark, inp), want) == []
     url = out.filter(F.col("covered")).first()["url"]
-    assert oracle.check_transform(oracle.digest(_flip_one_byte(out, url), geo=True), want)
-    assert oracle.check_transform(
+    assert oracle.compare(oracle.digest(_flip_one_byte(out, url), geo=True), want)
+    assert oracle.compare(
         oracle.digest(out.filter(F.col("url") != url), geo=True), want)
     shifted = out.withColumn("z_out", F.when(F.col("url") == url, F.col("z_out") + 0.001)
                              .otherwise(F.col("z_out")))
-    assert oracle.check_transform(oracle.digest(shifted, geo=True), want)
+    assert oracle.compare(oracle.digest(shifted, geo=True), want)
 
 
 def test_curate_resume_checks_fire_on_corruption(spark, tmp_path):
@@ -123,6 +131,17 @@ def test_curate_resume_checks_fire_on_corruption(spark, tmp_path):
     assert any(b.startswith("keys") for b in oracle.check_checkpoint(twice, want_geo))
 
 
+def test_leaf_check_fires_on_a_dropped_row(spark, tmp_path):
+    leaves = jobs.leaf_suite()
+    inp = gen.ensure(str(tmp_path), "sf", 23, 300, leaves=leaves)
+    want = inp["expected"]["leaf_rows"]
+    assert set(want) == set(leaves) and all(want.values())
+    got = jobs.leaf_pass(spark, inp["dir"], leaves)
+    assert oracle.compare(got, want) == []
+    dropped = dict(got, **{leaves[0]: got[leaves[0]] - 1})
+    assert oracle.compare(dropped, want)
+
+
 # ----------------------------------------------------------- the command
 def _bench_units():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -135,13 +154,14 @@ def _bench_units():
 def test_benchmark_json_matches_the_command():
     e2e, layer, workloads = _bench_units()
     assert e2e == run.END_TO_END
-    assert layer == run.PER_LAYER
+    assert layer == run.per_layer()
     assert sorted(workloads) == sorted(run.WORKLOADS)
 
 
 TINY = ("import sys; sys.path.insert(0, '.'); from perfbench import run; "
-        "run.WORKLOADS = {k: dict(v, rows=3000, warm_rows=500) "
-        "for k, v in run.WORKLOADS.items()}; sys.exit(run.main(sys.argv[1:]))")
+        "run.WORKLOADS = {k: dict(v, rows=300 if v['kind'] == 'sf' else 3000) "
+        "for k, v in run.WORKLOADS.items()}; run.WARM_ROWS = 500; "
+        "sys.exit(run.main(sys.argv[1:]))")
 
 
 @pytest.mark.parametrize("workload", sorted(run.WORKLOADS))
@@ -162,7 +182,7 @@ def test_every_metric_printed_with_unit(workload, trace):
     if not trace:
         for name in ("failed_frac", *e2e):
             assert record["metrics"][name]["n"] >= 1
-        assert record["metrics"]["setup_s"]["n"] >= 3
+        assert record["metrics"]["setup_s"]["n"] == 1
     assert record["host"]["nproc"] and record["host"]["bench_py_sha256"]
 
 

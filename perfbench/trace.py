@@ -5,7 +5,8 @@ A span is (name, start, end, parent, run id). Spans live in memory and
 are written as one JSON file when the run ends. Stage metrics are read
 from the uncompressed event log Spark writes when
 ``spark.eventLog.enabled`` is set; only jobs started under the traced
-job group are counted.
+job group (or a group named after it, such as a leaf's build group)
+are counted.
 """
 
 from __future__ import annotations
@@ -21,8 +22,8 @@ TRACE_GROUP = "perfbench-traced"
 
 
 class Tracer:
-    def __init__(self, run_id: str | None = None):
-        self.run_id = run_id or uuid.uuid4().hex[:12]
+    def __init__(self):
+        self.run_id = uuid.uuid4().hex[:12]
         self.spans: list[dict] = []
         self._stack: list[int] = []
 
@@ -50,8 +51,9 @@ class Tracer:
             json.dump({"run_id": self.run_id, "spans": self.spans}, f, indent=1)
 
 
-def read_event_logs(log_dir: str, group: str = TRACE_GROUP) -> dict:
-    """Job, task and stage totals of the jobs started under ``group``
+def read_event_logs(log_dir: str) -> dict:
+    """Job, task and stage totals of the jobs started under TRACE_GROUP
+    or a group whose name starts with it
     (TaskEnd fields as in the Spark listener JSON protocol)."""
     stages: set[int] = set()
     jobs = 0
@@ -65,7 +67,8 @@ def read_event_logs(log_dir: str, group: str = TRACE_GROUP) -> dict:
         for ev in events:
             if ev.get("Event") != "SparkListenerJobStart":
                 continue
-            if (ev.get("Properties") or {}).get("spark.jobGroup.id") == group:
+            group = (ev.get("Properties") or {}).get("spark.jobGroup.id") or ""
+            if group.startswith(TRACE_GROUP):
                 jobs += 1
                 stages.update(ev.get("Stage IDs", []))
         # stage ids restart in every application, so match per file
