@@ -246,3 +246,47 @@ def test_horizontal_wkt_resolves_by_name():
 
     with _pt.raises(ValueError, match="unknown CRS"):
         resolve.resolve('GEOGCRS["WGS84_UNKNOWN",DATUM["x"]]')
+
+
+def test_region_id_with_quote_and_backslash(spark, clean_catalog):
+    """Region ids come from caller configs: one holding a single quote
+    and a backslash must reach the SQL strategy's text as a literal
+    (transform_sql.sql_str), and both strategies must match the closed
+    form."""
+    rid = "RGNQ'uote\\01_8301"
+    catalog.register_regions_from_config({"regions": [{
+        "region_id": rid,
+        "region_ord": 5,  # highest -> wins W1 where it overlaps
+        "polygon": [[-77.8, 33.2], [-77.2, 33.2], [-77.2, 33.8],
+                    [-77.8, 33.8]],
+        "geoid": "core/geoid12b/gsynthq.gtx",
+        "planes": {
+            "core/geoid12b/gsynthq.gtx": [0.013, -0.018, -34.1],
+            f"{rid}/tss.gtx": [0.0021, 0.0029, 0.14],
+            f"{rid}/mllw.gtx": [-0.0011, 0.0021, -0.69],
+        },
+        "sigmas": {"geoid": 0.02, "tss": 0.03, "mllw": 0.04},
+    }]})
+    rng = np.random.default_rng(5)
+    n = 500
+    pdf = pd.DataFrame({
+        "pid": np.arange(n, dtype=np.int64),
+        "x": rng.uniform(-78.0, -77.0, n),
+        "y": rng.uniform(33.0, 34.0, n),
+        "z": np.round(rng.uniform(-5, 15, n), 2),
+    })
+    pts = spark.createDataFrame(pdf)
+    a = tx.transform_points(spark, pts, "ellipse", "mllw",
+                            strategy="sql").toPandas().set_index("pid")
+    b = tx.transform_points(spark, pts, "ellipse", "mllw",
+                            strategy="broadcast").toPandas().set_index("pid")
+    mine = a.index[a.region_id == rid]
+    assert len(mine) > 0
+    for pid in mine:
+        p = pdf.loc[pid]
+        exp = catalog.transform_closed_form(rid, "ellipse", "mllw",
+                                            p.x, p.y, p.z)
+        assert a.loc[pid, "z_out"] == round(exp, 3)
+    assert (a.region_id.fillna("∅") == b.region_id.fillna("∅")).all()
+    assert np.array_equal(a.z_out.fillna(-9e9).values,
+                          b.z_out.fillna(-9e9).values)

@@ -1,15 +1,17 @@
 """Focused tests for the round-6 optimization internals.
 
-Covers the three r6 rewrites whose equivalence arguments are local
+Covers the r6 rewrites whose equivalence arguments are local
 invariants (the oracle gate proves end-to-end equality; these pin the
 pieces):
 
 - slots_dim_pdf: the denormalized prune dim must carry REAL Nones for
   missing slots (pandas NaN would flip join-miss semantics) and agree
   row-for-row with the two-level slots->region-dim layout.
-- pip_literal_sql / slot_pip_sql / bilinear_sql: the SQL-string twins
-  must evaluate identically to the Column-DSL builders on a point grid
-  (rect AND general polygons; interior, edge, outside).
+- pip_literal_sql / bilinear_sql: the SQL strings must evaluate
+  exactly like their numpy oracles (spatial.pip.contains,
+  grids.bilinear.interp_tile) — rect AND general polygons; interior,
+  vertex, edge, outside.
+- _py_rows: no numpy scalar survives at any nesting depth.
 - read_input: repartitions a 1-partition scan up to default
   parallelism, leaves an already-parallel scan untouched.
 """
@@ -18,10 +20,14 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from vyperdatum_spark.engine import transform_sql as tsql
+from vyperdatum_spark.grids import bilinear
+from vyperdatum_spark.spatial import pip
 
 
 @pytest.fixture(scope="module")
@@ -61,48 +67,87 @@ def test_slots_dim_has_real_nones_and_matches_two_level_layout():
                 assert getattr(got, f"lon0_s{k}_0") == ref["lon0_0"]
 
 
-def test_pip_sql_string_matches_column_builder(spark):
+def test_pip_sql_matches_numpy_pip(spark):
+    """pip_literal_sql evaluates exactly like spatial.pip.contains
+    (the numpy oracle) on a rect and a general octagon, including
+    points on vertices and edges."""
     rect = [(-78.0, 33.0), (-77.0, 33.0), (-77.0, 34.0), (-78.0, 34.0),
             (-78.0, 33.0)]
     octagon = [(-77.5, 33.2), (-77.2, 33.0), (-76.8, 33.1), (-76.6, 33.5),
                (-76.7, 33.9), (-77.1, 34.1), (-77.6, 33.9), (-77.7, 33.5),
                (-77.5, 33.2)]
-    pts = spark.range(4000).select(
-        (F.lit(-78.2) + (F.col("id") % 80).cast("double") * 0.02).alias("x"),
-        (F.lit(32.8) + (F.floor(F.col("id") / 80) % 50).cast("double") * 0.03)
-        .alias("y"),
-    )
+    k = np.arange(4000)
+    xs = -78.2 + (k % 80) * 0.02
+    ys = 32.8 + (k // 80 % 50) * 0.03
     for poly in (rect, octagon):
-        dsl = tsql.pip_literal_expr(F.col("x"), F.col("y"), poly)
-        txt = F.expr(tsql.pip_literal_sql("x", "y", poly))
-        n_diff = pts.filter(~dsl.eqNullSafe(txt)).count()
-        assert n_diff == 0
+        ring = np.asarray(poly)
+        mids = (ring[:-1] + ring[1:]) / 2.0
+        px = np.concatenate([xs, ring[:, 0], mids[:, 0]])
+        py = np.concatenate([ys, ring[:, 1], mids[:, 1]])
+        pts = spark.createDataFrame(
+            pd.DataFrame({"i": np.arange(len(px)), "x": px, "y": py}))
+        got = (pts.select("i", F.expr(tsql.pip_literal_sql("x", "y", poly))
+                          .alias("inside"))
+               .toPandas().sort_values("i")["inside"].to_numpy())
+        assert np.array_equal(got, pip.contains(poly, px, py))
 
 
-def test_bilinear_sql_string_matches_column_builder(spark):
-    pts = spark.range(2000).select(
-        (F.lit(-78.0) + (F.col("id") % 50).cast("double") * 0.013).alias("x"),
-        (F.lit(33.0) + (F.floor(F.col("id") / 50) % 40).cast("double") * 0.017)
-        .alias("y"),
-        F.lit(-78.05).alias("lon0"), F.lit(32.95).alias("lat0"),
-        F.lit(0.05).alias("dlon"), F.lit(0.05).alias("dlat"),
-        (F.col("id") % 7).cast("double").alias("v00"),
-        (F.col("id") % 5).cast("double").alias("v01"),
-        (F.col("id") % 3).cast("double").alias("v10"),
-        (F.col("id") % 11).cast("double").alias("v11"),
-    )
-    dsl = tsql.bilinear_expr(
-        F.col("x"), F.col("y"), F.col("lon0"), F.col("lat0"),
-        F.col("dlon"), F.col("dlat"),
-        F.col("v00"), F.col("v01"), F.col("v10"), F.col("v11"),
-    )
-    txt = F.expr(tsql.bilinear_sql(
-        "x", "y", "lon0", "lat0", "dlon", "dlat",
-        "v00", "v01", "v10", "v11",
-    ))
-    # bit-exact equality, not approx: the twins must be the same tree
-    n_diff = pts.filter(~dsl.eqNullSafe(txt)).count()
-    assert n_diff == 0
+def test_bilinear_sql_matches_interp_tile(spark):
+    """bilinear_sql evaluates exactly like grids.bilinear.interp_tile
+    (the numpy oracle) on a 2×2 lattice whose origin is the point's
+    cell lower-left node — the origin the production corner join
+    supplies."""
+    rng = np.random.default_rng(7)
+    n = 2000
+    dlon, dlat = 0.05, 0.04
+    lon0 = -78.05 + rng.integers(0, 40, n) * dlon
+    lat0 = 32.95 + rng.integers(0, 40, n) * dlat
+    tx_, ty_ = rng.uniform(0.0, 0.999, n), rng.uniform(0.0, 0.999, n)
+    tx_[:10] = ty_[:10] = 0.0  # points on the lower-left node
+    pdf = pd.DataFrame({
+        "i": np.arange(n), "x": lon0 + tx_ * dlon, "y": lat0 + ty_ * dlat,
+        "lon0": lon0, "lat0": lat0, "dlon": dlon, "dlat": dlat,
+        "v00": rng.uniform(-40, 40, n), "v01": rng.uniform(-40, 40, n),
+        "v10": rng.uniform(-40, 40, n), "v11": rng.uniform(-40, 40, n),
+    })
+    got = (spark.createDataFrame(pdf).select("i", F.expr(tsql.bilinear_sql(
+        "x", "y", "lon0", "lat0", "dlon", "dlat", "v00", "v01", "v10", "v11",
+    )).alias("v")).toPandas().sort_values("i")["v"].to_numpy())
+    exp = np.array([
+        bilinear.interp_tile(
+            r.lon0, r.lat0, r.dlon, r.dlat, 2, 2,
+            np.array([r.v00, r.v01, r.v10, r.v11]),
+            np.array([r.x]), np.array([r.y]), knn_fallback=False,
+        )[0]
+        for r in pdf.itertuples(index=False)
+    ])
+    assert np.isfinite(exp).all()
+    # bit-exact equality, not approx: same float64 ops in the same order
+    assert np.array_equal(got, exp)
+
+
+def test_py_rows_leaves_no_numpy_scalars():
+    """Nested values (the kNN ``cands`` array<struct> shape, nested
+    lists and tuples) come out as plain Python at every depth."""
+    pdf = pd.DataFrame({
+        "g": ["a", "b"],
+        "ix": np.array([1, 2], dtype=np.int64),
+        "cands": pd.Series([
+            [(np.float64(1.5), np.float64(2.5), np.float64(0.1), np.int64(7))],
+            [[np.int32(3), (np.float32(0.5),)], (np.int64(9),)],
+        ], dtype=object),
+    })
+
+    def walk(v):
+        assert not isinstance(v, np.generic), type(v)
+        if isinstance(v, (list, tuple)):
+            for x in v:
+                walk(x)
+
+    rows = tsql._py_rows(pdf)
+    walk(rows)
+    assert rows[0] == ("a", 1, [(1.5, 2.5, 0.1, 7)])
+    assert rows[1][2] == [[3, (0.5,)], (9,)]
 
 
 def test_read_input_parallelizes_only_small_scans(spark, tmp_path):

@@ -133,24 +133,22 @@ def test_raster_outside_coverage_catzoc(spark):
     assert out.loc[1, "unc"] == 3.0
 
 
-def test_knn_edge_fill(spark):
+@pytest.mark.parametrize("strategy", ["sql", "broadcast"])
+def test_knn_edge_fill(spark, strategy):
     """NaN-hole grid: a point whose 4 surrounding nodes include NaN is
     filled from the nearest valid node when knn_fallback=True, NaN
-    otherwise (J8/W3 north_rule requirement)."""
-    region = catalog.REGIONS[0]
-
+    otherwise (J8/W3 north_rule requirement), on both strategies."""
     def hole(lon, lat):
         return (np.abs(lon - (-77.5)) < 0.026) & (np.abs(lat - 34.0) < 0.026)
 
-    defs = []
-    for gid in ["core/geoid12b/gsyntha.gtx", "RGNAcoast01_8301/tss.gtx",
-                "RGNAcoast01_8301/mllw.gtx"]:
-        gd = tiler.grid_def_for_region(gid, region)
-        defs.append(tiler.GridDef(
-            gd.grid_id, gd.lon0, gd.lat0, gd.dlon, gd.dlat, gd.nx, gd.ny,
-            gd.plane, nan_predicate=hole if gid.endswith("mllw.gtx") else None,
-        ))
-    tiles = tiler.build_tile_df(spark, defs)
+    # the catalog's grids with a NaN hole in region A's mllw grid; the
+    # point lies in region A only
+    defs = [
+        tiler.GridDef(gd.grid_id, gd.lon0, gd.lat0, gd.dlon, gd.dlat,
+                      gd.nx, gd.ny, gd.plane, nan_predicate=hole)
+        if gd.grid_id == "RGNAcoast01_8301/mllw.gtx" else gd
+        for gd in tiler.fixture_grid_defs()
+    ]
     pdf = pd.DataFrame(
         {"pid": np.array([0], dtype=np.int64),
          "x": [-77.501], "y": [34.001], "z": [10.0]}
@@ -159,13 +157,13 @@ def test_knn_edge_fill(spark):
 
     no_knn = tx.transform_points(
         spark, spark.createDataFrame(pdf), "ellipse", "mllw",
-        tiles=tiles, knn_fallback=False,
+        grid_defs=defs, knn_fallback=False, strategy=strategy,
     ).toPandas()
     assert not no_knn.covered.iloc[0]
 
     with_knn = tx.transform_points(
         spark, spark.createDataFrame(pdf), "ellipse", "mllw",
-        tiles=tiles, knn_fallback=True,
+        grid_defs=defs, knn_fallback=True, strategy=strategy,
     ).toPandas()
     assert with_knn.covered.iloc[0]
     assert np.isfinite(with_knn.z_out.iloc[0])

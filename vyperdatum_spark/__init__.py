@@ -9,8 +9,9 @@ as an idiomatic Spark DataFrame pipeline:
   (url, warc_ts, html, text, lang),
 - hierarchical cell-encoded (H3-analog, pure column math),
 - point-in-polygon matched against broadcast region polygons,
-- transformed via bilinear interpolation over a pre-tiled separation
-  grid side table (raster→vector tiling; cogrouped pandas kernel),
+- transformed via bilinear interpolation over the separation grids
+  (broadcast corner joins in SQL; a broadcast numpy kernel over
+  pre-tiled grids when the catalog's PIP expression is too large),
 - with last-write-wins / count-ranked region precedence, uncertainty
   joins, per-partition lineage + metrics, and bucket-level
   checkpoint/resume.

@@ -76,9 +76,7 @@ def transform_raster_points(
     input_is_height: bool = True,
     allow_points_outside_coverage: bool = False,
     include_uncertainty: bool = True,
-    tiles: DataFrame | None = None,
     knn_fallback: bool = False,
-    n_salt: int = 0,
 ) -> DataFrame:
     """The full raster semantics over a cells-as-points DataFrame.
 
@@ -95,12 +93,10 @@ def transform_raster_points(
         to_datum,
         key_col="cell_id",
         z_col="value",
-        tiles=tiles,
         allow_points_outside_coverage=allow_points_outside_coverage,
         include_uncertainty=include_uncertainty,
         precedence="count",  # W2: raster stacking order
         knn_fallback=knn_fallback,
-        n_salt=n_salt,
     )
     value = F.col("value")
     sep = F.col("sep")

@@ -1,34 +1,25 @@
-"""The transform engine: points × regions × grid tiles.
+"""The transform engine: points × regions × grids.
 
 Spark-first re-expression of the reference's ``transform_dataset``
 (core.py:357-464). The reference loops regions in the driver and calls
 PROJ per region; here the whole thing is a declarative DataFrame plan
-with THREE physical strategies sharing one semantics:
+with TWO physical strategies sharing one semantics:
 
 sql (DEFAULT, engine/transform_sql.py) — the whole region loop as
     broadcast hash joins + whole-stage-codegen column math: cover-slot
     prune join [J1], literal-codegen ray-cast PIP [J2], pre-combined
     grid corner joins + bilinear expressions [J3/A4], ord-ascending
-    slot coalesce [W1]. ZERO shuffles, ZERO Python crossings; heavy
-    page columns never leave Tungsten rows.
+    slot coalesce [W1] or count-ranked winner [W2], kNN edge fill
+    [J8]. ZERO shuffles, ZERO Python crossings; heavy page columns
+    never leave Tungsten rows.
 
 broadcast — fused mapInArrow kernel: the region loop runs in numpy
     over Arrow batches, grids shipped once per executor via
-    sc.broadcast (the PROJ-grid-cache analog). Routes J8 kNN edge
-    fallback and W2 count precedence, which the SQL plan can't express
-    without extra passes.
+    sc.broadcast (the PROJ-grid-cache analog). The auto-route for
+    catalogs whose literal PIP CASE exceeds the SQL strategy's codegen
+    budget; plan size is O(1) in catalog complexity.
 
-cogroup — salted cogroup against the (grid_id, cell5) tile side
-    table, for grid working sets beyond broadcast budget:
-
-    points --cell5/cell9--> ⋈ broadcast(fine region cover)  [J1 prune]
-           cogroup (region_id, cell5[, salt]) with region tile bundles
-               -> ONE pandas kernel: ray-cast PIP [J2] +
-                  per-step bilinear [J3/J4/J8] + ordered sum [A4]
-           groupBy key -> precedence winner              [W1/W2]
-           ⋈ back to points on key                        [enrichment]
-
-All strategies end in the same finalize contract: F1 coverage, the F4
+Both strategies end in the same finalize contract: F1 coverage, the F4
 axis-flip matrix, F5 round(3), F6 CATZOC, J6 uncertainty, the
 output-frame z-correction — plus the horizontal-CRS pre-step
 (spatial/crs.py) when the input is projected or foreign-frame.
@@ -45,14 +36,11 @@ Scale notes (100 TB / 10^12 rows):
   driving table, all join sides O(grid nodes + polygons) ≈ MBs; it
   measured 0.865 N→4N scaling efficiency (BENCH/BASELINE.md) because
   there is nothing to shuffle and no Python worker boundary to
-  contend on.
+  contend on. A hot coordinate costs nothing extra: no row is grouped
+  by key, so skew cannot pile rows into one task.
 - the prune join uses a FINE-res polygon cover (broadcast, a few
   hundred rows) so non-member points mostly skip the expensive math;
   exactness still comes from the exact PIP.
-- kernel strategies: each tile bundle ships once per cogroup/executor,
-  not once per point row; the hot-key problem (famous coordinates) is
-  handled by explicit salting (pmod(xxhash64(key), n_salt)) with AQE
-  skew-join as backstop.
 - J5 sampled mode (transform_points_sampled) transforms O(distinct
   fine cells) and equi-joins back — the cheapest path when exact
   per-point PIP is not required.
@@ -69,39 +57,10 @@ from ..datums import catalog, pipeline as pl
 from ..grids import bilinear, tiler
 from ..spatial import cells, crs as hcrs, pip
 
-DEFAULT_N_SALT = 8
-
 
 # --------------------------------------------------------------------
 # dimension tables (driver-built, broadcast at join time)
 # --------------------------------------------------------------------
-
-def region_cover_df(spark: SparkSession, res: int = cells.FINE_RES) -> DataFrame:
-    """(region_id, region_ord, cell5, cell_r) — the J1 prune dimension.
-
-    Fine-res cells tighten the prune (fewer non-member rows reach the
-    kernel); each row also carries the COARSE parent cell, the
-    tile-bundle cogroup key."""
-    rows = []
-    for r in catalog.REGIONS:
-        for c in pip.polygon_cover(list(r.polygon), res):
-            rows.append(
-                (r.region_id, r.region_ord, int(cells.parent(c, cells.COARSE_RES)),
-                 int(c))
-            )
-    return spark.createDataFrame(
-        rows, "region_id string, region_ord int, cell5 long, _cellr long"
-    )
-
-
-def steps_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFrame:
-    """(region_id, region_ord, step_ord, grid_id, sign) per region."""
-    rows = catalog.region_steps(from_datum, to_datum)
-    return spark.createDataFrame(
-        rows,
-        "region_id string, region_ord int, step_ord int, grid_id string, sign double",
-    )
-
 
 def region_dim_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFrame:
     """(region_id, unc, pipeline_str) — J6 uncertainty + lineage dim."""
@@ -116,73 +75,44 @@ def region_dim_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFr
     return spark.createDataFrame(rows, "region_id string, unc double, pipeline_str string")
 
 
-def tile_bundles_df(spark: SparkSession, tiles: DataFrame,
-                    from_datum: str, to_datum: str) -> DataFrame:
-    """Right side of the transform cogroup: per (region_id, cell5),
-    one row per pipeline step carrying that step's tile lattice +
-    sign/order — the whole regional pipeline for a cell in one group."""
-    steps = steps_df(spark, from_datum, to_datum)
-    return tiles.join(F.broadcast(steps), "grid_id").select(
-        "region_id", "cell5", "step_ord", "sign",
-        "lon0", "lat0", "dlon", "dlat", "nx", "ny", "values",
-    )
-
-
 # --------------------------------------------------------------------
-# broadcast strategy: zero-shuffle fused kernel over mapInPandas
+# broadcast strategy: zero-shuffle fused kernel over mapInArrow
 # --------------------------------------------------------------------
 
-def _bundle_payload(spark: SparkSession, tiles: DataFrame,
-                    from_datum: str, to_datum: str):
-    """Collect the per-region step tiles into plain dicts for
-    broadcast: {region_id: [(step_ord, sign, {cell5: tile_tuple})]}.
+def _fixture_payload(from_datum: str, to_datum: str, grid_defs=None):
+    """The broadcast kernel's grid payload,
+    {region_id: [(step_ord, sign, {cell5: tile_tuple})]}, built in
+    driver-side numpy from the grid definitions (``grid_defs``, or the
+    catalog's fixture grids when None) — no Spark job.
 
     This is the Spark analog of PROJ's grid cache: the regional grids
     needed by one job are a bounded, reusable working set (VDatum
     grids are MBs) — shipping them once per executor beats shuffling
-    every point row to the tiles. The cogroup strategy remains for
-    grid sets beyond broadcast budget."""
-    rows = tile_bundles_df(spark, tiles, from_datum, to_datum).collect()
-    by_region: dict = {}
-    for r in rows:
-        step = by_region.setdefault(r["region_id"], {}).setdefault(
-            (r["step_ord"], r["sign"]), {}
-        )
-        step[r["cell5"]] = (
-            r["lon0"], r["lat0"], r["dlon"], r["dlat"], r["nx"], r["ny"],
-            np.asarray(r["values"], dtype=np.float64),
-        )
-    return {
-        rid: [(o, s, tiles_by_cell) for (o, s), tiles_by_cell in
-              sorted(steps.items())]
-        for rid, steps in by_region.items()
-    }
-
-
-def _fixture_payload(from_datum: str, to_datum: str):
-    """Same payload as :func:`_bundle_payload` but built directly from
-    the catalog's grid definitions in driver-side numpy — no Spark job.
-
-    ``_bundle_payload`` launched a createDataFrame → join → collect job
-    costing 0.8-2.6 s of FIXED driver time per transform call, which
-    capped N→4N scaling (Amdahl) in round 1. The result is cached per
+    every point row to the tiles. A step whose grid is missing or has
+    no tiles is left out, so its region fails the step-count check
+    (outside grid coverage). The catalog payload is cached per
     (catalog version, datum pair): the grid working set is immutable
     for a catalog version, exactly like PROJ's process-wide grid cache.
     """
     key = (catalog.catalog_version(), from_datum.lower(), to_datum.lower())
-    hit = _FIXTURE_PAYLOAD_CACHE.get(key)
-    if hit is not None:
-        return hit
-    defs = {gd.grid_id: gd for gd in tiler.fixture_grid_defs()}
+    if grid_defs is None:
+        hit = _FIXTURE_PAYLOAD_CACHE.get(key)
+        if hit is not None:
+            return hit
+    defs = {gd.grid_id: gd for gd in (
+        grid_defs if grid_defs is not None else tiler.fixture_grid_defs())}
     by_region: dict = {}
     for region_id, _ord, step_ord, grid_id, sign in catalog.region_steps(
         from_datum, to_datum
     ):
+        gd = defs.get(grid_id)
+        rows = tiler.tile_rows(gd) if gd is not None else []
+        if not rows:
+            continue
         step = by_region.setdefault(region_id, {}).setdefault(
             (step_ord, sign), {}
         )
-        for row in tiler.tile_rows(defs[grid_id]):
-            # row layout matches TILE_SCHEMA:
+        for row in rows:
             # (grid_id, cell5, lon0, lat0, dlon, dlat, nx, ny, values)
             step[row[1]] = (
                 row[2], row[3], row[4], row[5], row[6], row[7],
@@ -193,7 +123,8 @@ def _fixture_payload(from_datum: str, to_datum: str):
               sorted(steps.items())]
         for rid, steps in by_region.items()
     }
-    _FIXTURE_PAYLOAD_CACHE[key] = payload
+    if grid_defs is None:
+        _FIXTURE_PAYLOAD_CACHE[key] = payload
     return payload
 
 
@@ -205,16 +136,16 @@ def make_broadcast_kernel(
     key_type: str,
     polygons: dict[str, list[tuple[float, float]]],
     covers: dict[str, np.ndarray],      # region -> sorted fine-cell ids
-    bc_bundles,                         # sc.broadcast(_bundle_payload output)
+    bc_bundles,                         # sc.broadcast(_fixture_payload output)
     region_ords: dict[str, int],
     n_steps: dict[str, int],
     knn_fallback: bool,
-    emit: str,    # "passthrough" | "winner" (W1) | "per_region" (W2)
+    emit: str,    # "passthrough" (W1) | "per_region" (W2)
     x_col: str = "x",
     y_col: str = "y",
 ):
-    """mapInPandas kernel mirroring the reference's region loop
-    (core.py:421-453) — regions in catalog order, later regions
+    """mapInArrow / mapInPandas kernel mirroring the reference's region
+    loop (core.py:421-453) — regions in catalog order, later regions
     overwrite — vectorized numpy per Arrow batch, no shuffle.
 
     The grid payload arrives as an EXPLICIT Spark broadcast (not a
@@ -299,134 +230,42 @@ def make_broadcast_kernel(
                 names + ["region_id", "region_ord", "sep"],
             )
 
-    def _winner_arrays(pdf, xs, ys, c5s, c9s):
-        n = len(pdf)
-        best_sep = np.full(n, np.nan)
-        best_ord = np.full(n, -1, dtype=np.int32)
-        best_region = np.full(n, None, dtype=object)
-        for rid in order:  # ascending ord: overwrite = W1
-            cand = np.isin(c9s, covers[rid])
-            idx = np.flatnonzero(cand)
-            if len(idx) == 0:
-                continue
-            idx, total = _region_sep(rid, xs, ys, c5s, idx)
-            if total is None or len(idx) == 0:
-                continue
-            ok = np.isfinite(total)
-            upd = idx[ok]
-            best_sep[upd] = total[ok]
-            best_ord[upd] = region_ords[rid]
-            best_region[upd] = rid
-        return best_region, best_ord, best_sep
-
     if emit == "passthrough":
         return arrow_passthrough, out_schema
 
-    def fn(it):
+    def per_region(it):
+        """One row per (point, region it is a member candidate of) for
+        count-ranked precedence (W2)."""
         for pdf in it:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
             xs = pdf[x_col].to_numpy(dtype=np.float64)
             ys = pdf[y_col].to_numpy(dtype=np.float64)
             c9s = cells.encode_np(xs, ys, cells.FINE_RES)
             c5s = cells.encode_np(xs, ys, cells.COARSE_RES)
-            if emit == "winner":
-                best_region, best_ord, best_sep = _winner_arrays(
-                    pdf, xs, ys, c5s, c9s
-                )
-                member = best_ord >= 0
-                yield pd.DataFrame(
-                    {
-                        key_col: pdf[key_col].to_numpy()[member],
-                        "region_id": best_region[member],
-                        "region_ord": best_ord[member],
-                        "sep_total": best_sep[member],
-                    }
-                )
-            else:  # per_region rows for count-ranked precedence (W2)
-                parts = []
-                for rid in order:
-                    cand = np.isin(c9s, covers[rid])
-                    idx = np.flatnonzero(cand)
-                    if len(idx) == 0:
-                        continue
-                    idx, total = _region_sep(rid, xs, ys, c5s, idx)
-                    if total is None or len(idx) == 0:
-                        continue
-                    parts.append(
-                        pd.DataFrame(
-                            {
-                                key_col: pdf[key_col].to_numpy()[idx],
-                                "region_id": rid,
-                                "region_ord": region_ords[rid],
-                                "sep_total": total,
-                            }
-                        )
+            parts = []
+            for rid in order:
+                cand = np.isin(c9s, covers[rid])
+                idx = np.flatnonzero(cand)
+                if len(idx) == 0:
+                    continue
+                idx, total = _region_sep(rid, xs, ys, c5s, idx)
+                if total is None or len(idx) == 0:
+                    continue
+                parts.append(
+                    pd.DataFrame(
+                        {
+                            key_col: pdf[key_col].to_numpy()[idx],
+                            "region_id": rid,
+                            "region_ord": region_ords[rid],
+                            "sep_total": total,
+                        }
                     )
-                if parts:
-                    yield pd.concat(parts, ignore_index=True)
-
-    return fn, out_schema
-
-
-# --------------------------------------------------------------------
-# cogroup strategy kernel: PIP + bilinear steps + ordered sum
-# --------------------------------------------------------------------
-
-def make_region_kernel(
-    key_col: str,
-    key_type: str,
-    polygons: dict[str, list[tuple[float, float]]],
-    n_steps: dict[str, int],
-    knn_fallback: bool,
-):
-    out_schema = (
-        f"{key_col} {key_type}, region_id string, region_ord int, sep_total double"
-    )
-    cols = [key_col, "region_id", "region_ord", "sep_total"]
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame({c: pd.Series(dtype=t) for c, t in zip(
-                cols, ["object", "object", "int32", "float64"])})
-        region_id = left["region_id"].iat[0]
-        xs = left["x"].to_numpy(dtype=np.float64)
-        ys = left["y"].to_numpy(dtype=np.float64)
-        inside = pip.contains(polygons[region_id], xs, ys)
-        expected = n_steps.get(region_id, 0)
-        if expected == 0:
-            # zero-step (identity) pipeline — datum pairs with equal
-            # step lists but different names (e.g. mllw → 'noaa chart
-            # datum') compile to []; the reference runs the empty PROJ
-            # pipeline as identity, so in-polygon points get sep 0,
-            # NOT out-of-coverage
-            total = np.zeros(len(left))
-        elif len(right) != expected:
-            # a step's tile is missing for this cell ⇒ outside grid
-            # coverage (PROJ-inf semantics, core.py:445-446)
-            total = np.full(len(left), np.nan)
-        else:
-            total = np.zeros(len(left))
-            for t in right.sort_values("step_ord").itertuples(index=False):
-                v = bilinear.interp_tile(
-                    float(t.lon0), float(t.lat0), float(t.dlon), float(t.dlat),
-                    int(t.nx), int(t.ny),
-                    np.asarray(t.values, dtype=np.float64),
-                    xs, ys, knn_fallback=knn_fallback,
                 )
-                total = total + float(t.sign) * v  # pipeline order, float64
-        sep = np.where(inside, total, np.nan)
-        return pd.DataFrame(
-            {
-                key_col: left[key_col],
-                "region_id": left["region_id"],
-                "region_ord": left["region_ord"],
-                "sep_total": sep,
-            }
-        )
+            if parts:
+                yield pd.concat(parts, ignore_index=True)
 
-    return fn, out_schema
+    return per_region, out_schema
 
 
 # --------------------------------------------------------------------
@@ -442,14 +281,12 @@ def transform_points(
     x_col: str = "x",
     y_col: str = "y",
     z_col: str = "z",
-    tiles: DataFrame | None = None,
     allow_points_outside_coverage: bool = False,
     include_uncertainty: bool = True,
     include_lineage: bool = False,
     precedence: str = "list",  # "list" = W1 (points), "count" = W2 (raster)
     knn_fallback: bool = False,
-    n_salt: int = 0,
-    strategy: str = "sql",  # "sql" | "broadcast" | "cogroup"
+    strategy: str = "sql",  # "sql" | "broadcast"
     input_crs: str = "nad83s",
     output_frame: str | None = None,
     grid_defs: list | None = None,
@@ -478,23 +315,24 @@ def transform_points(
                       the reference's output-frame correction
                       ``new_z = new_z - (z - diffz)``.
 
+    ``grid_defs`` (tiler.GridDef list) replaces the catalog's fixture
+    grids with caller-supplied runtime grids, on either strategy.
+
     Strategies:
       sql        — pure-JVM broadcast-join plan (transform_sql.py):
                    zero Python, zero shuffle, whole-stage codegen. THE
-                   default. Auto-routes to `broadcast` when it can't
-                   express the request (caller-supplied tile table) or
-                   when the catalog's literal PIP CASE exceeds the
-                   measured codegen budget (general polygons past a
-                   few dozen crossing edges — janino's 64 KB method
-                   limit; transform_sql.sql_strategy_within_budget).
-      broadcast  — fused mapInArrow kernel, grids as an explicit Spark
-                   broadcast. Needed for J8 kNN and W2 count ranking.
-      cogroup    — salted cogroup join against the tile side table, for
-                   grid working sets beyond broadcast budget.
+                   default; covers W1/W2 precedence and J8 kNN fill.
+                   Auto-routes to `broadcast` when the catalog's
+                   literal PIP CASE exceeds the measured codegen
+                   budget (general polygons past a few dozen crossing
+                   edges — janino's 64 KB method limit;
+                   transform_sql.sql_strategy_within_budget).
+      broadcast  — fused mapInArrow kernel, grids built on the driver
+                   and shipped as an explicit Spark broadcast.
     """
-    if strategy not in ("sql", "broadcast", "cogroup"):
+    if strategy not in ("sql", "broadcast"):
         raise ValueError(
-            f"strategy {strategy!r} not one of ('sql', 'broadcast', 'cogroup')"
+            f"strategy {strategy!r} not one of ('sql', 'broadcast')"
         )
     # datum specs may be EPSG ints, WKT, (horizontal, vertical) tuples
     # or names (reference vypercrs.py:685-812); a horizontal component
@@ -513,12 +351,6 @@ def transform_points(
             from ..spatial import crs as _hc
 
             output_frame = _hc.CRS_FRAME[out_horiz]
-    # the SQL strategy now covers W2 count precedence and J8 kNN edge
-    # fill (round-3); only a caller-supplied TILE DataFrame (no driver-
-    # side grid definitions to compile into the broadcast dims) still
-    # routes to the Python-kernel strategies
-    if strategy == "sql" and tiles is not None and grid_defs is None:
-        strategy = "broadcast"
     # expression-budget auto-route (round-5): the SQL strategy bakes a
     # PIP ray-cast CASE over the whole catalog into every slot; past
     # the measured codegen budget (transform_sql.PIP_CASE_BUDGET —
@@ -532,8 +364,6 @@ def transform_points(
 
         if not _tsql_budget.sql_strategy_within_budget():
             strategy = "broadcast"
-    if grid_defs is not None and tiles is None and strategy != "sql":
-        tiles = tiler.build_tile_df(spark, grid_defs)
     # F4 sign matrix: depth-axis INPUT negates z before the pipeline,
     # depth-axis OUTPUT negates after (core.py:397-403, 441-449)
     flips = pl.axis_flips(from_datum, to_datum)
@@ -627,10 +457,9 @@ def transform_points(
             include_lineage, key_col, dz_corr,
         ))
 
-    fixture_tiles = tiles is None
-    if tiles is None and strategy == "cogroup":
-        tiles = tiler.build_tile_df(spark)
-
+    # broadcast: regional grids fit the broadcast budget (the
+    # PROJ-grid-cache analog), so the whole region loop runs inside
+    # one pass over the input partitions
     polygons = {r.region_id: list(r.polygon) for r in catalog.REGIONS}
     region_ords = {r.region_id: r.region_ord for r in catalog.REGIONS}
     n_steps = {
@@ -638,130 +467,70 @@ def transform_points(
         for r in catalog.REGIONS
     }
     key_type = dict(points.dtypes)[key_col]
+    covers = {
+        r.region_id: np.array(
+            sorted(pip.polygon_cover(list(r.polygon), cells.FINE_RES)),
+            dtype=np.int64,
+        )
+        for r in catalog.REGIONS
+    }
+    bc_bundles = spark.sparkContext.broadcast(
+        _fixture_payload(from_datum, to_datum, grid_defs)
+    )
+    if precedence != "count":
+        # passthrough: W1 winner resolved inside the kernel (the
+        # region overwrite loop) and every input column rides
+        # through Arrow — the WHOLE transform is one zero-shuffle
+        # mapInArrow pass
+        from pyspark.sql import types as T
 
-    if strategy == "broadcast":
-        # zero-shuffle path: regional grids fit the broadcast budget
-        # (the PROJ-grid-cache analog), so the whole region loop runs
-        # inside one mapInPandas pass over the input partitions.
-        covers = {
-            r.region_id: np.array(
-                sorted(pip.polygon_cover(list(r.polygon), cells.FINE_RES)),
-                dtype=np.int64,
-            )
-            for r in catalog.REGIONS
-        }
-        if fixture_tiles:
-            # catalog grids: pure driver-side numpy, cached — no Spark job
-            payload = _fixture_payload(from_datum, to_datum)
-        else:
-            payload = _bundle_payload(spark, tiles, from_datum, to_datum)
-        bc_bundles = spark.sparkContext.broadcast(payload)
-        if precedence == "list":
-            # passthrough: W1 winner resolved inside the kernel (the
-            # region overwrite loop) and every input column rides
-            # through Arrow — the WHOLE transform is one zero-shuffle
-            # mapInPandas pass
-            from pyspark.sql import types as T
-
-            kernel, _ = make_broadcast_kernel(
-                key_col, key_type, polygons, covers, bc_bundles,
-                region_ords, n_steps, knn_fallback, "passthrough",
-                x_col, y_col,
-            )
-            out_fields = list(base.schema.fields) + [
-                T.StructField("region_id", T.StringType(), True),
-                T.StructField("region_ord", T.IntegerType(), True),
-                T.StructField("sep", T.DoubleType(), True),
-            ]
-            enriched = base.mapInArrow(kernel, T.StructType(out_fields))
-            return _emit(_finalize(
-                enriched, None, spark, from_datum, to_datum, z, flips,
-                allow_points_outside_coverage, include_uncertainty,
-                include_lineage, key_col, dz_corr,
-            ))
-        kernel, out_schema = make_broadcast_kernel(
+        kernel, _ = make_broadcast_kernel(
             key_col, key_type, polygons, covers, bc_bundles,
-            region_ords, n_steps, knn_fallback, "per_region",
+            region_ords, n_steps, knn_fallback, "passthrough",
             x_col, y_col,
         )
-        narrow = points.select(
-            F.col(key_col), x.alias(x_col), y.alias(y_col)
+        out_fields = list(base.schema.fields) + [
+            T.StructField("region_id", T.StringType(), True),
+            T.StructField("region_ord", T.IntegerType(), True),
+            T.StructField("sep", T.DoubleType(), True),
+        ]
+        enriched = base.mapInArrow(kernel, T.StructType(out_fields))
+        return _emit(_finalize(
+            enriched, None, spark, from_datum, to_datum, z, flips,
+            allow_points_outside_coverage, include_uncertainty,
+            include_lineage, key_col, dz_corr,
+        ))
+    kernel, out_schema = make_broadcast_kernel(
+        key_col, key_type, polygons, covers, bc_bundles,
+        region_ords, n_steps, knn_fallback, "per_region",
+        x_col, y_col,
+    )
+    narrow = points.select(
+        F.col(key_col), x.alias(x_col), y.alias(y_col)
+    )
+    per_region = narrow.mapInPandas(kernel, out_schema)
+    # Arrow converts pandas NaN to Spark NULL, and isnan(NULL) is
+    # false — both checks are required or out-of-coverage candidates
+    # survive into the precedence aggregation
+    valid = per_region.filter(
+        F.col("sep_total").isNotNull() & ~F.isnan(F.col("sep_total"))
+    )
+    # W2: region with the most valid points wins (ties → later ord)
+    counts = valid.groupBy("region_id").agg(F.count("*").alias("_cnt"))
+    ranked = valid.join(F.broadcast(counts), "region_id")
+    winner_struct = F.struct(
+        F.col("_cnt"), F.col("region_ord"), F.col("region_id"), F.col("sep_total")
+    )
+    winners = (
+        ranked.groupBy(key_col)
+        .agg(F.max(winner_struct).alias("_w"))
+        .select(
+            key_col,
+            F.col("_w.region_id").alias("region_id"),
+            F.col("_w.region_ord").alias("region_ord"),
+            F.col("_w.sep_total").alias("sep"),
         )
-        per_region = narrow.mapInPandas(kernel, out_schema)
-        valid = per_region.filter(
-            F.col("sep_total").isNotNull() & ~F.isnan(F.col("sep_total"))
-        )
-    else:
-        cover = region_cover_df(spark)
-        bundles = tile_bundles_df(spark, tiles, from_datum, to_datum)
-        kernel, out_schema = make_region_kernel(
-            key_col, key_type, polygons, n_steps, knn_fallback
-        )
-        narrow = points.select(
-            F.col(key_col),
-            x.alias("x"),
-            y.alias("y"),
-            cells.encode_col(x, y, cells.FINE_RES).alias("_cellr"),
-        )
-        cand = narrow.join(F.broadcast(cover), "_cellr", "inner")
-
-        if n_salt and n_salt > 1:
-            cand = cand.withColumn(
-                "salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_salt)).cast("int")
-            )
-            bundles_s = bundles.withColumn(
-                "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-            )
-            group_keys = ["region_id", "cell5", "salt"]
-        else:
-            bundles_s = bundles
-            group_keys = ["region_id", "cell5"]
-
-        per_region = (
-            cand.groupBy(*group_keys)
-            .cogroup(bundles_s.groupBy(*group_keys))
-            .applyInPandas(kernel, out_schema)
-        )
-        # Arrow converts pandas NaN to Spark NULL, and isnan(NULL) is
-        # false — both checks are required or out-of-coverage candidates
-        # survive into the precedence aggregation
-        valid = per_region.filter(
-            F.col("sep_total").isNotNull() & ~F.isnan(F.col("sep_total"))
-        )
-
-    if precedence == "count":
-        # W2: region with the most valid points wins (ties → later ord)
-        counts = valid.groupBy("region_id").agg(F.count("*").alias("_cnt"))
-        ranked = valid.join(F.broadcast(counts), "region_id")
-        winner_struct = F.struct(
-            F.col("_cnt"), F.col("region_ord"), F.col("region_id"), F.col("sep_total")
-        )
-        winners = (
-            ranked.groupBy(key_col)
-            .agg(F.max(winner_struct).alias("_w"))
-            .select(
-                key_col,
-                F.col("_w.region_id").alias("region_id"),
-                F.col("_w.region_ord").alias("region_ord"),
-                F.col("_w.sep_total").alias("sep"),
-            )
-        )
-    else:
-        # W1: last region in catalog order with valid data wins
-        winner_struct = F.struct(
-            F.col("region_ord"), F.col("region_id"), F.col("sep_total")
-        )
-        winners = (
-            valid.groupBy(key_col)
-            .agg(F.max(winner_struct).alias("_w"))
-            .select(
-                key_col,
-                F.col("_w.region_id").alias("region_id"),
-                F.col("_w.region_ord").alias("region_ord"),
-                F.col("_w.sep_total").alias("sep"),
-            )
-        )
-
+    )
     return _emit(_finalize(
         base, winners, spark, from_datum, to_datum, z, flips,
         allow_points_outside_coverage, include_uncertainty,

@@ -1,7 +1,7 @@
 """Pure-JVM transform strategy: broadcast joins + column math only.
 
-Third execution strategy for :func:`transform_points` (alongside the
-Python-kernel ``broadcast`` and ``cogroup`` strategies): the ENTIRE
+The default execution strategy for :func:`transform_points` (the
+other is the Python-kernel ``broadcast`` strategy): the ENTIRE
 region loop of the reference (core.py:421-453) — candidate pruning,
 exact point-in-polygon, per-step bilinear interpolation, ordered step
 sum, last-write-wins precedence — is expressed as Catalyst column
@@ -43,9 +43,15 @@ union over the steps' nodes preserves the PROJ-inf coverage semantics
 step's surrounding corner is NaN, which is iff any combined corner is
 NaN. Steps on distinct lattices stay separate join groups.
 
-Limits: list precedence only (W1; raster count-ranking W2 needs a
-global count aggregate) and no kNN edge fallback (J8) — both keep the
-Python-kernel strategies. `transform_points(strategy=...)` routes.
+Precedence: last-write-wins (W1) is the slot coalesce above; raster
+count-ranking (W2) adds one aggregate job for the per-region counts
+and picks the winner with the counts baked in as literals. The kNN
+edge fill (J8) joins precomputed candidate nodes onto the corner rows.
+Catalogs whose literal PIP CASE exceeds the codegen budget
+(sql_strategy_within_budget) route to the broadcast kernel instead.
+
+Every catalog value spliced into SQL text goes through :func:`sql_str`;
+double literals through :func:`_d`.
 
 Reference parity: region loop core.py:421-453, PROJ-inf coverage
 semantics core.py:445-446, bilinear grid sampling core.py:283-311.
@@ -330,16 +336,36 @@ def _d(v: float) -> str:
     return f"{float(v)!r}D"
 
 
-def pip_literal_sql(x: str, y: str, poly: list[tuple[float, float]]) -> str:
-    """String twin of :func:`pip_literal_expr` over column NAMES.
+def sql_str(v: str) -> str:
+    """SQL string literal: backslashes and single quotes escaped, so a
+    catalog value (region ids come from caller configs) cannot end the
+    literal early. Assumes Spark's default backslash-escape parsing
+    (``spark.sql.parser.escapedStringLiterals=false``)."""
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    Why strings (r6): the Column-DSL builders cost one py4j
-    round-trip per operator — the kNN-edge plan build spent 1.8 s of
-    its 2.1 s in ~11k socket round-trips (cProfile), with
-    slot_pip_expr + bilinear_expr the dominant leaves.  One F.expr per
-    staged column replaces hundreds of round-trips; the parsed tree is
-    operator-identical (double literals via the D suffix, same
-    parenthesization), so results and codegen are unchanged."""
+
+def pip_literal_sql(x: str, y: str, poly: list[tuple[float, float]]) -> str:
+    """Even-odd ray cast over column NAMES with the polygon baked in as
+    literals — pure whole-stage-codegen arithmetic, the exact mirror of
+    spatial.pip.contains (half-open crossing (y1 <= y) != (y2 <= y),
+    strict x < intersection, identical float64 op order).
+
+    Axis-aligned rectangles collapse to 4 comparisons with the SAME
+    half-open boundary semantics as the ray cast: a vertical edge
+    spanning [y0, y1] crosses iff (y0<=y) != (y1<=y) ⇔ y ∈ [y0, y1),
+    and the point is inside iff it is left of the far edge but not of
+    the near one ⇔ x ∈ [x0, x1). This keeps the generated method small
+    enough to JIT, which matters more than it reads: past 8 KB of
+    bytecode the whole fused stage drops to the JVM interpreter.
+
+    Horizontal edges can never satisfy the crossing test, so they are
+    dropped at generation time (also keeps ANSI mode away from the
+    zero division).
+
+    Why strings (r6): Column-DSL builders cost one py4j round-trip per
+    operator — the kNN-edge plan build spent 1.8 s of its 2.1 s in
+    ~11k socket round-trips (cProfile). One F.expr per staged column
+    replaces hundreds of round-trips."""
     ring = pip._ring(poly)
     rect = _axis_rect(ring)
     if rect is not None:
@@ -358,49 +384,6 @@ def pip_literal_sql(x: str, y: str, poly: list[tuple[float, float]]) -> str:
         count = (f"({count} + (CASE WHEN ({crosses} AND ({x} < {xint})) "
                  f"THEN 1 ELSE 0 END))")
     return f"(({count} % 2) = 1)"
-
-
-def pip_literal_expr(x: Column, y: Column,
-                     poly: list[tuple[float, float]]) -> Column:
-    """Even-odd ray cast with the polygon baked in as literals — pure
-    whole-stage-codegen arithmetic, the exact mirror of
-    spatial.pip.contains (half-open crossing (y1 <= y) != (y2 <= y),
-    strict x < intersection, identical float64 op order).
-
-    Axis-aligned rectangles collapse to 4 comparisons with the SAME
-    half-open boundary semantics as the ray cast: a vertical edge
-    spanning [y0, y1] crosses iff (y0<=y) != (y1<=y) ⇔ y ∈ [y0, y1),
-    and the point is inside iff it is left of the far edge but not of
-    the near one ⇔ x ∈ [x0, x1). This keeps the generated method small
-    enough to JIT, which matters more than it reads: past 8 KB of
-    bytecode the whole fused stage drops to the JVM interpreter.
-
-    Horizontal edges can never satisfy the crossing test, so they are
-    dropped at generation time (also keeps ANSI mode away from the
-    zero division).
-    """
-    ring = pip._ring(poly)
-    rect = _axis_rect(ring)
-    if rect is not None:
-        x0, y0, x1, y1 = rect
-        # ray-cast equivalence for an axis rect: the two vertical
-        # edges at x0 and x1 each cross iff y ∈ [y0, y1); the point is
-        # inside iff exactly the x1 edge is hit (x < x1) and not the
-        # x0 edge (x >= x0)
-        return (
-            (F.lit(y0) <= y) & (y < F.lit(y1))
-            & (F.lit(x0) <= x) & (x < F.lit(x1))
-        )
-    count: Column = F.lit(0)
-    for i in range(len(ring) - 1):
-        x1, y1 = float(ring[i, 0]), float(ring[i, 1])
-        x2, y2 = float(ring[i + 1, 0]), float(ring[i + 1, 1])
-        if y1 == y2:
-            continue
-        crosses = (F.lit(y1) <= y) != (F.lit(y2) <= y)
-        xint = F.lit(x1) + (y - F.lit(y1)) * F.lit(x2 - x1) / F.lit(y2 - y1)
-        count = count + F.when(crosses & (x < xint), F.lit(1)).otherwise(F.lit(0))
-    return count % 2 == 1
 
 
 # ------------------------------------------------------------------
@@ -427,7 +410,7 @@ PIP_CASE_BUDGET = 250
 
 def pip_case_cost() -> int:
     """Estimated codegen cost (in weighted comparison units, see the
-    budget note above) of ONE slot_pip_expr CASE over the current
+    budget note above) of ONE slot_pip_sql CASE over the current
     catalog."""
     total = 0
     for r in catalog.REGIONS:
@@ -449,25 +432,13 @@ def sql_strategy_within_budget() -> bool:
     return pip_case_cost() <= PIP_CASE_BUDGET
 
 
-def slot_pip_expr(x: Column, y: Column, rid: Column) -> Column:
+def slot_pip_sql(x: str, y: str, rid: str) -> str:
     """PIP for whichever region occupies a slot: a region-literal CASE
     over the catalog (null slot → null → invalid)."""
-    expr = None
-    for r in catalog.REGIONS:
-        branch = pip_literal_expr(x, y, list(r.polygon))
-        expr = (F.when(rid == r.region_id, branch) if expr is None
-                else expr.when(rid == r.region_id, branch))
-    if expr is None:
-        return F.lit(False)
-    return expr
-
-
-def slot_pip_sql(x: str, y: str, rid: str) -> str:
-    """String twin of :func:`slot_pip_expr` (see pip_literal_sql)."""
     if not catalog.REGIONS:
         return "false"
     whens = " ".join(
-        f"WHEN {rid} = '{r.region_id}' "
+        f"WHEN {rid} = {sql_str(r.region_id)} "
         f"THEN {pip_literal_sql(x, y, list(r.polygon))}"
         for r in catalog.REGIONS
     )
@@ -476,8 +447,9 @@ def slot_pip_sql(x: str, y: str, rid: str) -> str:
 
 def bilinear_sql(x: str, y: str, lon0: str, lat0: str, dlon: str, dlat: str,
                  v00: str, v01: str, v10: str, v11: str) -> str:
-    """String twin of :func:`bilinear_expr` — same float64 ops, same
-    parenthesization (left-assoc sum of the four corner terms)."""
+    """Same float64 expression as grids.bilinear.interp_tile (tx/ty
+    relative to the joined lattice cell's lower-left node; left-assoc
+    sum of the four corner terms)."""
     tx_ = f"(({x} - {lon0}) / {dlon} - FLOOR(({x} - {lon0}) / {dlon}))"
     ty_ = f"(({y} - {lat0}) / {dlat} - FLOOR(({y} - {lat0}) / {dlat}))"
     return (
@@ -485,23 +457,6 @@ def bilinear_sql(x: str, y: str, lon0: str, lat0: str, dlon: str, dlat: str,
         f" + {tx_} * (1.0D - {ty_}) * {v01}"
         f" + (1.0D - {tx_}) * {ty_} * {v10}"
         f" + {tx_} * {ty_} * {v11})"
-    )
-
-
-def bilinear_expr(
-    x: Column, y: Column,
-    lon0: Column, lat0: Column, dlon: Column, dlat: Column,
-    v00: Column, v01: Column, v10: Column, v11: Column,
-) -> Column:
-    """Same float64 expression as grids.bilinear.interp_tile (tx/ty
-    relative to the joined lattice cell's lower-left node)."""
-    tx = (x - lon0) / dlon - F.floor((x - lon0) / dlon)
-    ty = (y - lat0) / dlat - F.floor((y - lat0) / dlat)
-    return (
-        (F.lit(1.0) - tx) * (F.lit(1.0) - ty) * v00
-        + tx * (F.lit(1.0) - ty) * v01
-        + (F.lit(1.0) - tx) * ty * v10
-        + tx * ty * v11
     )
 
 
@@ -568,15 +523,22 @@ def slots_dim_pdf(grids: dict, j_max: int) -> tuple[pd.DataFrame, str, int]:
     return merged, ", ".join(schema), depth
 
 
-def _py_rows(pdf: pd.DataFrame) -> list[tuple]:
-    """Plain-python row tuples (no numpy scalars): the non-Arrow
+def _py(v):
+    """``v`` with every numpy scalar made a Python scalar, recursing
+    into lists (arrays) and tuples (structs): the non-Arrow
     createDataFrame path under plain spark-submit rejects np.int64."""
-    out = []
-    for tup in pdf.itertuples(index=False, name=None):
-        out.append(tuple(
-            v.item() if isinstance(v, np.generic) else v for v in tup
-        ))
-    return out
+    if isinstance(v, np.generic):
+        return v.item()
+    if isinstance(v, list):
+        return [_py(x) for x in v]
+    if isinstance(v, tuple):
+        return tuple(_py(x) for x in v)
+    return v
+
+
+def _py_rows(pdf: pd.DataFrame) -> list[tuple]:
+    """Plain-python row tuples (no numpy scalars at any depth)."""
+    return [_py(tup) for tup in pdf.itertuples(index=False, name=None)]
 
 
 def _dims(spark: SparkSession, from_datum: str, to_datum: str,
@@ -628,9 +590,9 @@ def _dims(spark: SparkSession, from_datum: str, to_datum: str,
         rows = []
         for tup in _py_rows(cpdf):
             g, ix, iy = tup[0], tup[1], tup[2]
-            rows.append(tup + (by_cell.pop((g, ix, iy), None),))
+            rows.append(tup + (_py(by_cell.pop((g, ix, iy), None)),))
         for (g, ix, iy), cands in by_cell.items():
-            rows.append((g, ix, iy, None, None, None, None, cands))
+            rows.append((g, ix, iy, None, None, None, None, _py(cands)))
         corner_schema += (", cands array<struct<lon: double, lat: double, "
                           "v: double, i: bigint>>")
         corners = spark.createDataFrame(rows, corner_schema)

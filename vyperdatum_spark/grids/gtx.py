@@ -15,10 +15,10 @@ is trivially simple:
 ``read_gtx`` parses bytes (or a file path) into an :class:`ArrayGrid`
 — an array-backed grid that duck-types the tiler's ``GridDef``
 surface (``lon0/lat0/dlon/dlat/nx/ny/node_values``), so an ingested
-grid drops straight into ``tiler.build_tile_df`` (tile side table)
-and ``transform_points(grid_defs=…)`` (SQL/broadcast strategies) with
-no further plumbing. This closes the VDatum on-ramp: a user with real
-``*.gtx`` grids tiles them once and every join path works unchanged.
+grid drops straight into ``transform_points(grid_defs=…)`` (SQL and
+broadcast strategies) with no further plumbing. This closes the VDatum
+on-ramp: a user with real ``*.gtx`` grids passes them in and every
+transform path works unchanged.
 
 Longitudes: VDatum ships GTX grids in [0, 360) convention; lon0 ≥ 180
 is normalized to the engine's [-180, 180) on read (PROJ does the

@@ -1,24 +1,20 @@
 """Raster→vector grid tiler.
 
 The reference reads GTX/GeoTIFF separation grids through PROJ/GDAL at
-transform time (core.py:283-311, raster.py:237-286). At 10^12-row
-scale that is file I/O per task; instead we pre-tile every separation
-grid into a **side table keyed by coarse cell** so the transform
-becomes a partition-pruned equi join (SURVEY.md §1.1 "Separation
-grid" row):
+transform time (core.py:283-311, raster.py:237-286). Here a grid is a
+:class:`GridDef` lattice, and :func:`tile_rows` cuts it into tiles
+keyed by coarse cell:
 
-    grid_tiles(grid_id string, cell5 long,
-               lon0 double, lat0 double, dlon double, dlat double,
-               nx int, ny int, values array<double>)
+    (grid_id, cell5, lon0, lat0, dlon, dlat, nx, ny, values)
 
-One row per (grid_id, coarse cell). Each tile carries the lattice
+One tile per (grid_id, coarse cell). Each tile carries the lattice
 nodes overlapping its cell's bbox expanded by one node spacing, so any
 point inside the cell has its 4 surrounding nodes in-tile (no
 cross-tile reads in the bilinear kernel). ``values`` is row-major
 (iy * nx + ix), float64, NaN at nodes outside the grid's coverage.
 
-In production the tile table is written once (partitioned by
-(grid_id, cell5) in Iceberg/parquet) and reused by every job.
+The broadcast transform strategy ships these tiles to executors as its
+grid payload (engine/transform.py ``_fixture_payload``).
 """
 
 from __future__ import annotations
@@ -27,25 +23,9 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from ..datums import catalog
 from ..spatial import cells
-
-TILE_SCHEMA = T.StructType(
-    [
-        T.StructField("grid_id", T.StringType(), False),
-        T.StructField("cell5", T.LongType(), False),
-        T.StructField("lon0", T.DoubleType(), False),
-        T.StructField("lat0", T.DoubleType(), False),
-        T.StructField("dlon", T.DoubleType(), False),
-        T.StructField("dlat", T.DoubleType(), False),
-        T.StructField("nx", T.IntegerType(), False),
-        T.StructField("ny", T.IntegerType(), False),
-        T.StructField("values", T.ArrayType(T.DoubleType(), False), False),
-    ]
-)
 
 
 @dataclass(frozen=True)
@@ -129,12 +109,3 @@ def tile_rows(gd: GridDef, res: int = cells.COARSE_RES) -> list[tuple]:
             )
         )
     return rows
-
-
-def build_tile_df(spark: SparkSession,
-                  grid_defs: list[GridDef] | None = None) -> DataFrame:
-    """The grid_tiles side table as a DataFrame (fixture scale:
-    driver-built; production: written once to a partitioned table)."""
-    defs = grid_defs if grid_defs is not None else fixture_grid_defs()
-    rows = [r for gd in defs for r in tile_rows(gd)]
-    return spark.createDataFrame(rows, TILE_SCHEMA)
