@@ -1,6 +1,8 @@
 """Geoparse + pages pipeline tests: byte-identical text invariant,
 miss handling, end-to-end pages→transform."""
 
+import re
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -50,3 +52,23 @@ def test_pages_end_to_end_transform(spark):
     famous = pdf[np.isclose(pdf.x, datagen.FAMOUS[0])]
     assert len(famous) > 10 and famous.covered.all()
     assert (famous.region_id == "RGNCbay01_8301").all()
+
+
+def test_full_text_regex_runs_once_under_a_caller_filter(spark, tmp_path):
+    """The caller's ``x IS NOT NULL`` filter must not pull the
+    full-text regexes into the Filter: in the optimized plan the
+    Filter reads only the staged match, and each full-text pattern
+    sits in exactly one operator."""
+    path = str(tmp_path / "pages")
+    # a parquet scan, not a local relation: the optimizer folds
+    # filters over local relations away before the plan can be read
+    datagen.pages_df(spark, 50).write.parquet(path)
+    parsed = geoparse.geoparse(spark.read.parquet(path))
+    plan = (parsed.filter(F.col("x").isNotNull())
+            ._jdf.queryExecution().optimizedPlan().toString())
+    ops = plan.splitlines()
+    filters = [op for op in ops if op.lstrip(" :+-").startswith("Filter")]
+    assert filters and not any("text#" in op for op in filters), plan
+    for pat in (geoparse.COORD_RE, geoparse.ELEV_RE):
+        full = re.compile(r"regexp_extract\(text#\d+, " + re.escape(pat) + r", 0\)")
+        assert sum(1 for op in ops if full.search(op)) == 1, (pat, plan)

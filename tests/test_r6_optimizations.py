@@ -11,7 +11,8 @@ pieces):
   exactly like their numpy oracles (spatial.pip.contains,
   grids.bilinear.interp_tile) — rect AND general polygons; interior,
   vertex, edge, outside.
-- _py_rows: no numpy scalar survives at any nesting depth.
+- local_frame: numpy scalars at any nesting depth reach Spark as
+  values, NaN stays NaN, and the frame is a local relation.
 - read_input: repartitions a 1-partition scan up to default
   parallelism, leaves an already-parallel scan untouched.
 """
@@ -126,28 +127,28 @@ def test_bilinear_sql_matches_interp_tile(spark):
     assert np.array_equal(got, exp)
 
 
-def test_py_rows_leaves_no_numpy_scalars():
-    """Nested values (the kNN ``cands`` array<struct> shape, nested
-    lists and tuples) come out as plain Python at every depth."""
-    pdf = pd.DataFrame({
-        "g": ["a", "b"],
-        "ix": np.array([1, 2], dtype=np.int64),
-        "cands": pd.Series([
-            [(np.float64(1.5), np.float64(2.5), np.float64(0.1), np.int64(7))],
-            [[np.int32(3), (np.float32(0.5),)], (np.int64(9),)],
-        ], dtype=object),
-    })
+def test_local_frame_takes_numpy_scalars_at_any_depth(spark):
+    """Dim rows carry numpy scalars (itertuples over numpy columns, the
+    kNN ``cands`` array<struct>): they reach Spark as plain values, a
+    float NaN stays NaN (only None is null), and the frame is an Arrow
+    local relation."""
+    from vyperdatum_spark.session import local_frame
 
-    def walk(v):
-        assert not isinstance(v, np.generic), type(v)
-        if isinstance(v, (list, tuple)):
-            for x in v:
-                walk(x)
-
-    rows = tsql._py_rows(pdf)
-    walk(rows)
-    assert rows[0] == ("a", 1, [(1.5, 2.5, 0.1, 7)])
-    assert rows[1][2] == [[3, (0.5,)], (9,)]
+    rows = [
+        ("a", np.int64(1), np.float64("nan"),
+         [(np.float64(1.5), 2.5, np.float32(0.5), np.int64(7))]),
+        ("b", np.int32(2), None, None),
+        ("c", 3, 1.0, []),
+    ]
+    df = local_frame(spark, rows, "g string, ix long, v double, cands "
+                     "array<struct<lon: double, lat: double, v: double, i: bigint>>")
+    got = df.collect()
+    assert [r.ix for r in got] == [1, 2, 3]
+    assert math.isnan(got[0].v) and got[1].v is None and got[2].v == 1.0
+    assert [tuple(c) for c in got[0].cands] == [(1.5, 2.5, 0.5, 7)]
+    assert got[1].cands is None and got[2].cands == []
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    assert local_frame(spark, [], "g string, ix long").count() == 0
 
 
 def test_read_input_parallelizes_only_small_scans(spark, tmp_path):

@@ -1,12 +1,14 @@
-"""Cell-index and point-in-polygon unit tests (pure numpy)."""
+"""Cell-index and point-in-polygon unit tests (numpy, plus the Spark
+forms of the cell encode)."""
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from vyperdatum_spark.datums import catalog
 from vyperdatum_spark.spatial import cells, pip
 
 
-def test_cell_encode_forms_agree():
+def test_cell_encode_forms_agree(spark):
     rng = np.random.default_rng(7)
     lon = rng.uniform(-180, 180, 500)
     lat = rng.uniform(-90, 90, 500)
@@ -14,6 +16,21 @@ def test_cell_encode_forms_agree():
         enc = cells.encode_np(lon, lat, res)
         for i in range(0, 500, 97):
             assert cells.encode_one(float(lon[i]), float(lat[i]), res) == int(enc[i])
+    # the Spark forms: the Column builder and the SQL text the transform
+    # plan is built from, on the same points plus NaN and null rows
+    nan = float("nan")
+    odd = [(nan, 10.0), (10.0, nan), (nan, nan), (None, 10.0), (10.0, None)]
+    df = spark.createDataFrame(
+        list(zip(lon.tolist(), lat.tolist())) + odd, "lon double, lat double")
+    for res in (5, 9):
+        rows = df.select(
+            cells.encode_col(F.col("lon"), F.col("lat"), res).alias("c"),
+            F.expr(cells.encode_sql("lon", "lat", res)).alias("s"),
+        ).collect()
+        col, sql = [r.c for r in rows], [r.s for r in rows]
+        assert col == sql
+        assert col[:500] == cells.encode_np(lon, lat, res).tolist()
+        assert col[-2:] == [None, None]
 
 
 def test_cell_bounds_contain_point():

@@ -325,6 +325,24 @@ def test_empty_input_all_strategies(spark, strategy):
     assert {"region_id", "z_out", "covered", "sep", "unc"} <= set(out.columns)
 
 
+@pytest.mark.parametrize("knn_fallback", [False, True], ids=["default", "knn"])
+def test_broadcast_dims_are_local_relations(spark, fixture_points, knn_fallback):
+    """Every broadcast side of the SQL plan is an Arrow local relation:
+    the dims reach the BroadcastExchange as a LocalTableScan, never as
+    a pickled Python RDD (``Scan ExistingRDD``)."""
+    out = tx.transform_points(
+        spark, spark.createDataFrame(fixture_points), "ellipse", "mllw",
+        knn_fallback=knn_fallback, include_lineage=True,
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    ops = [op.lstrip(" :+-") for op in plan.splitlines()]
+    built = [ops[i + 1] for i, op in enumerate(ops)
+             if op.startswith("BroadcastExchange")]
+    assert len(built) >= 5, plan  # cover slots, 3 corner slots, lineage
+    assert all(op.startswith("LocalTableScan") for op in built), plan
+    assert "ExistingRDD" not in plan
+
+
 def test_sql_count_precedence_matches_broadcast(spark, fixture_points):
     """Round-3: W2 count-ranked precedence in the pure-JVM SQL
     strategy must be row-identical to the Python-kernel path."""

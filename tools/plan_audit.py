@@ -7,6 +7,9 @@ properties that matter at 100 TB:
 - broadcast exchanges (dimension shipping),
 - whole-stage-codegen coverage,
 - Python crossings (ArrowEvalPython / MapInArrow / FlatMapGroupsInPandas),
+- broadcast sides that scan a Python RDD (``Scan ExistingRDD`` under a
+  BroadcastExchange: a dim built with ``createDataFrame(list)``, whose
+  every broadcast runs a Spark job through Python workers),
 - cartesian / nested-loop joins (the O(n²) smells),
 - parquet scan column pruning (ReadSchema width vs table width).
 
@@ -40,6 +43,7 @@ AUDIT = [
     ("sample_stratified", "stratified hash sampling"),
     ("url_canonical_dedup", "URL canonicalization dedup"),
     ("url_latest_capture", "latest capture per canonical URL"),
+    ("url_blocklist_filter", "domain blocklist (broadcast list-built dim)"),
     ("html_extract_text", "HTML → text extraction"),
     ("line_dedup", "cross-doc line dedup (boilerplate removal)"),
     ("dedup_paragraphs", "keep-first exact paragraph dedup"),
@@ -67,6 +71,28 @@ AUDIT = [
 ]
 
 
+def _depth(line: str) -> int:
+    """Column of the operator name in a tree-string line."""
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def python_rdd_broadcasts(lines: list[str]) -> int:
+    """BroadcastExchange nodes whose subtree scans a Python RDD
+    (``Scan ExistingRDD[``; an Arrow table past the local-relation
+    threshold scans as ``Scan ExistingRDD arrow[``, inside the JVM)."""
+    n = 0
+    for i, line in enumerate(lines):
+        if not line.lstrip(" :+-").startswith("BroadcastExchange"):
+            continue
+        for below in lines[i + 1:]:
+            if _depth(below) <= _depth(line):
+                break
+            if "Scan ExistingRDD[" in below:
+                n += 1
+                break
+    return n
+
+
 def audit_plan(plan: str) -> dict:
     lines = plan.splitlines()
     shuffles = sum(
@@ -88,6 +114,7 @@ def audit_plan(plan: str) -> dict:
     return {
         "shuffles": shuffles,
         "broadcasts": bcasts,
+        "python_rdd_broadcasts": python_rdd_broadcasts(lines),
         "codegen_stages": wscg,
         "python_crossings": python,
         "cartesian_or_bnlj": cartesian,
@@ -126,17 +153,22 @@ def main() -> None:
         "executed plans (AQE off so codegen spans are visible). The",
         "columns are the properties that decide 100-TB behavior: data",
         "shuffles (want 0 on the transform path), broadcasts (dimension",
-        "shipping), whole-stage-codegen stages, Python boundary",
-        "crossings (0 = pure JVM), cartesian/nested-loop joins (0",
-        "everywhere except the bounded brute-force ANN baseline), and",
+        "shipping), broadcast sides that scan a Python RDD (py-rdd",
+        "bcasts: a `createDataFrame(list)` dim, whose broadcast runs a",
+        "job through Python workers; an Arrow local relation scans as",
+        "LocalTableScan instead), whole-stage-codegen stages, Python",
+        "boundary crossings (0 = pure JVM), cartesian/nested-loop joins",
+        "(0 everywhere except the bounded brute-force ANN baseline), and",
         "parquet scan widths (column pruning reached the reader).",
         "",
-        "| query | role | shuffles | broadcasts | codegen | python | cartesian | scan widths |",
-        "|---|---|---|---|---|---|---|---|",
+        "| query | role | shuffles | broadcasts | py-rdd bcasts | codegen |"
+        " python | cartesian | scan widths |",
+        "|---|---|---|---|---|---|---|---|---|",
     ]
     for name, desc, a in rows:
         out.append(
             f"| {name} | {desc} | {a['shuffles']} | {a['broadcasts']} |"
+            f" {a['python_rdd_broadcasts']} |"
             f" {a['codegen_stages']} | {a['python_crossings']} |"
             f" {a['cartesian_or_bnlj']} | {a['scan_widths']} |"
         )
@@ -154,6 +186,9 @@ def main() -> None:
         "  winner comparison as literals. 0 Python crossings on all.",
         "- LSH/IVF queries shuffle on their band/bucket keys — the",
         "  candidate-generation joins are equi-joins, never cartesian.",
+        "- py-rdd bcasts: the transform's dims are Arrow local relations",
+        "  (0 on every geo query); `url_blocklist_filter` still builds",
+        "  its broadcast blocklist with `createDataFrame(list)`.",
         "",
     ]
     with open(os.path.join(os.path.dirname(os.path.dirname(

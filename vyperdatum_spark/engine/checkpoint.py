@@ -42,6 +42,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import tables
 
 METRICS_SCHEMA = (
@@ -228,7 +229,8 @@ def read_metrics(spark: SparkSession, out_dir: str,
                  run_id: str | None = None) -> DataFrame:
     """Per-(bucket, partition) metrics for the CURRENT table state,
     reassembled from snapshot properties + metrics sidecar files
-    (driver-side manifest scan, no data read). Only the current chain
+    (driver-side manifest scan, no data read) into an Arrow local
+    relation. Only the current chain
     is consulted, so metrics of runs whose output was later
     overwritten are excluded — with or without ``run_id``."""
     rows = []
@@ -249,4 +251,4 @@ def read_metrics(spark: SparkSession, out_dir: str,
                 int(m["rows_in"]), int(m["rows_out"]),
                 int(m["rows_error"]), int(m["rows_nocoverage"]),
             ))
-    return spark.createDataFrame(rows, METRICS_SCHEMA)
+    return local_frame(spark, rows, METRICS_SCHEMA)

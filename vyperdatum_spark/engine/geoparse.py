@@ -34,17 +34,25 @@ def geoparse(pages: DataFrame, text_col: str = "text") -> DataFrame:
 
     All other columns pass through untouched. Misses yield nulls.
 
-    Each regex runs ONCE over the full text (regexp_substr) and the
-    cheap per-group extracts rerun only over the ~25-char match —
-    staging the match as a real column stops Catalyst inlining the
-    full-text scan once per group (4 extra full scans measured ≈ 2×
-    the whole job's scan+parse cost).
+    Each regex runs ONCE over the full text (regexp_extract group 0)
+    and the cheap per-group extracts rerun only over the ~25-char
+    match. A miss yields '' (null for a null text), which the
+    per-group extracts and ``try_cast`` carry to null x/y/z.
+
+    Why the ``inline(array(struct(...)))``: it is an optimizer
+    barrier. Plain staged columns are not enough — Catalyst pushes a
+    caller's ``x IS NOT NULL`` filter below the projections and
+    inlines ``x`` (and with it the full-text regex) into the filter,
+    one copy per reference: the filter held six copies of the COORD
+    regex, up to five of which ran per row. A generator's output can
+    be neither inlined nor pushed through, so both full-text regexes
+    run once per row, below any filter on x/y/z.
     """
-    stage = pages.withColumn(
-        "_m", F.regexp_substr(F.col(text_col), F.lit(COORD_RE))
-    ).withColumn(
-        "_e", F.regexp_substr(F.col(text_col), F.lit(ELEV_RE))
-    )
+    t = F.col(text_col)
+    stage = pages.select("*", F.inline(F.array(F.struct(
+        F.regexp_extract(t, COORD_RE, 0).alias("_m"),
+        F.regexp_extract(t, ELEV_RE, 0).alias("_e"),
+    ))))
     m, e = F.col("_m"), F.col("_e")
     lat = _signed(F.regexp_extract(m, COORD_RE, 1), F.regexp_extract(m, COORD_RE, 2), "S")
     lon = _signed(F.regexp_extract(m, COORD_RE, 3), F.regexp_extract(m, COORD_RE, 4), "W")

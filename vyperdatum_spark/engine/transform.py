@@ -10,8 +10,10 @@ sql (DEFAULT, engine/transform_sql.py) — the whole region loop as
     prune join [J1], literal-codegen ray-cast PIP [J2], pre-combined
     grid corner joins + bilinear expressions [J3/A4], ord-ascending
     slot coalesce [W1] or count-ranked winner [W2], kNN edge fill
-    [J8]. ZERO shuffles, ZERO Python crossings; heavy page columns
-    never leave Tungsten rows.
+    [J8]. ZERO shuffles, ZERO Python crossings: the broadcast dims are
+    Arrow local relations (LocalTableScan, no Python worker), and heavy
+    page columns never leave Tungsten rows. The plan, _finalize
+    included, is built from SQL text.
 
 broadcast — fused mapInArrow kernel: the region loop runs in numpy
     over Arrow batches, grids shipped once per executor via
@@ -55,7 +57,10 @@ from pyspark.sql import functions as F
 
 from ..datums import catalog, pipeline as pl
 from ..grids import bilinear, tiler
+from ..session import local_frame
 from ..spatial import cells, crs as hcrs, pip
+from . import transform_sql
+from .transform_sql import _d, sql_ident, sql_str
 
 
 # --------------------------------------------------------------------
@@ -72,7 +77,7 @@ def region_dim_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFr
         )
         for r in catalog.REGIONS
     ]
-    return spark.createDataFrame(rows, "region_id string, unc double, pipeline_str string")
+    return local_frame(spark, rows, "region_id string, unc double, pipeline_str string")
 
 
 # --------------------------------------------------------------------
@@ -359,15 +364,11 @@ def transform_points(
     # degrades to interpreted evaluation. Route those catalogs to the
     # broadcast kernel, where the region loop is numpy per Arrow batch
     # and plan size is O(1) in catalog complexity.
-    if strategy == "sql":
-        from . import transform_sql as _tsql_budget
-
-        if not _tsql_budget.sql_strategy_within_budget():
-            strategy = "broadcast"
+    if strategy == "sql" and not transform_sql.sql_strategy_within_budget():
+        strategy = "broadcast"
     # F4 sign matrix: depth-axis INPUT negates z before the pipeline,
     # depth-axis OUTPUT negates after (core.py:397-403, 441-449)
     flips = pl.axis_flips(from_datum, to_datum)
-    x, y, z = F.col(x_col), F.col(y_col), F.col(z_col)
 
     # ----- horizontal CRS pre-step (core.py:397-403 then :419) -------
     in_crs = hcrs.validate_crs(input_crs)
@@ -380,13 +381,14 @@ def transform_points(
     out_is_in = (in_crs == "nad83s" and out_frame == "NAD83S") or (
         in_crs == "itrfs" and out_frame == "ITRFS"
     )
+    frame_mode = in_crs != "nad83s" or out_frame != hcrs.GEOID_FRAME
     dz_corr = None
     emit_out_xy = None
-    if in_crs != "nad83s" or out_frame != hcrs.GEOID_FRAME:
+    if frame_mode:
         # depth-axis negation FIRST, then the 3D transform to the
         # geoid frame (matches the reference's operation order)
         lon_c, lat_c, zg_c = hcrs.to_geoid_frame_cols(
-            in_crs, x, y, F.lit(flips[0]) * z
+            in_crs, F.col(x_col), F.col(y_col), F.lit(flips[0]) * F.col(z_col)
         )
         points = (
             points.withColumn("x_geo", lon_c)
@@ -394,65 +396,64 @@ def transform_points(
             .withColumn("_zg", zg_c)
         )
         x_col, y_col, z_col = "x_geo", "y_geo", "_zg"
-        x, y, z = F.col(x_col), F.col(y_col), F.col(z_col)
         flips = (1.0, flips[1])  # input flip folded into _zg
         if not out_is_in and out_frame != hcrs.GEOID_FRAME:
             # output-frame z-correction new_z -= (z - diffz): the net
             # in→out 3D frame shift evaluated at the geoid-frame point
-            dz_corr = F.lit(0.0)
+            dz_corr = "0.0D"
             if in_frame == "ITRFS":
-                dz_corr = dz_corr + hcrs.frame_dz_cols(x, y)
+                dz_corr = f"({dz_corr} + {hcrs.frame_dz_sql(x_col, y_col)})"
             if out_frame == "ITRFS":
-                dz_corr = dz_corr - hcrs.frame_dz_cols(x, y)
+                dz_corr = f"({dz_corr} - {hcrs.frame_dz_sql(x_col, y_col)})"
         if out_is_in:
             emit_out_xy = None  # original x/y already ARE the output
         elif out_frame == hcrs.GEOID_FRAME:
-            emit_out_xy = (x, y)
+            emit_out_xy = (x_col, y_col)
         else:
             out_crs_name = "nad83s" if out_frame == "NAD83S" else "itrfs"
-            emit_out_xy = hcrs.from_geoid_frame_cols(out_crs_name, x, y)
+            emit_out_xy = hcrs.from_geoid_frame_sql(out_crs_name, x_col, y_col)
 
-    cell = cells.encode_col(x, y, cells.COARSE_RES)
-    base = points.withColumn("cell5", cell)
+    cell5 = cells.encode_sql(sql_ident(x_col), sql_ident(y_col), cells.COARSE_RES)
 
     def _emit(df: DataFrame) -> DataFrame:
         if emit_out_xy is not None:
             # reference writes output coords only for valid (covered)
             # points (ans_x[valid_index], core.py:446-448); uncovered
             # rows keep null x_out/y_out
-            cov = F.col("covered") if "covered" in df.columns else F.lit(True)
-            df = df.withColumn(
-                "x_out", F.when(cov, emit_out_xy[0])
-            ).withColumn("y_out", F.when(cov, emit_out_xy[1]))
-        return df.drop("_zg")
+            df = df.withColumns({
+                "x_out": F.expr(f"CASE WHEN covered THEN {emit_out_xy[0]} END"),
+                "y_out": F.expr(f"CASE WHEN covered THEN {emit_out_xy[1]} END"),
+            })
+        return df.drop("_zg") if frame_mode else df
 
     null_steps = pl.compile_steps(from_datum, to_datum, "R", "G")
 
     if null_steps is None:
         # identical datums: z passes through (flip/round still apply)
-        out = base.withColumn("region_id", F.lit(None).cast("string"))
-        out = out.withColumn("region_ord", F.lit(None).cast("int"))
-        out = out.withColumn("sep", F.lit(0.0))
-        out = out.withColumn(
-            "z_out", F.round(F.lit(flips[1]) * (F.lit(flips[0]) * z), 3)
-        )
-        out = out.withColumn("covered", F.lit(True))
+        z = sql_ident(z_col)
+        cols = {
+            "cell5": cell5,
+            "region_id": "CAST(NULL AS STRING)",
+            "region_ord": "CAST(NULL AS INT)",
+            "sep": "0.0D",
+            "z_out": f"round({_d(flips[1])} * ({_d(flips[0])} * {z}), 3)",
+            "covered": "true",
+        }
         if include_uncertainty:
-            out = out.withColumn("unc", F.lit(0.0))
+            cols["unc"] = "0.0D"
         if include_lineage:
-            out = out.withColumn("pipeline_str", F.lit(None).cast("string"))
-        return _emit(out)
+            cols["pipeline_str"] = "CAST(NULL AS STRING)"
+        return _emit(points.withColumns(
+            {name: F.expr(e) for name, e in cols.items()}))
 
     if strategy == "sql":
-        from . import transform_sql
-
         enriched = transform_sql.transform_points_sql(
-            spark, base.drop("cell5"), from_datum, to_datum, x_col, y_col,
+            spark, points, from_datum, to_datum, x_col, y_col,
             grid_defs=grid_defs, knn_fallback=knn_fallback,
             precedence=precedence, grid_cache_token=grid_cache_token,
         )
         return _emit(_finalize(
-            enriched, None, spark, from_datum, to_datum, z, flips,
+            enriched, None, spark, from_datum, to_datum, z_col, flips,
             allow_points_outside_coverage, include_uncertainty,
             include_lineage, key_col, dz_corr,
         ))
@@ -460,6 +461,7 @@ def transform_points(
     # broadcast: regional grids fit the broadcast budget (the
     # PROJ-grid-cache analog), so the whole region loop runs inside
     # one pass over the input partitions
+    base = points.withColumn("cell5", F.expr(cell5))
     polygons = {r.region_id: list(r.polygon) for r in catalog.REGIONS}
     region_ords = {r.region_id: r.region_ord for r in catalog.REGIONS}
     n_steps = {
@@ -496,7 +498,7 @@ def transform_points(
         ]
         enriched = base.mapInArrow(kernel, T.StructType(out_fields))
         return _emit(_finalize(
-            enriched, None, spark, from_datum, to_datum, z, flips,
+            enriched, None, spark, from_datum, to_datum, z_col, flips,
             allow_points_outside_coverage, include_uncertainty,
             include_lineage, key_col, dz_corr,
         ))
@@ -505,9 +507,8 @@ def transform_points(
         region_ords, n_steps, knn_fallback, "per_region",
         x_col, y_col,
     )
-    narrow = points.select(
-        F.col(key_col), x.alias(x_col), y.alias(y_col)
-    )
+    narrow = points.selectExpr(
+        sql_ident(key_col), sql_ident(x_col), sql_ident(y_col))
     per_region = narrow.mapInPandas(kernel, out_schema)
     # Arrow converts pandas NaN to Spark NULL, and isnan(NULL) is
     # false — both checks are required or out-of-coverage candidates
@@ -532,7 +533,7 @@ def transform_points(
         )
     )
     return _emit(_finalize(
-        base, winners, spark, from_datum, to_datum, z, flips,
+        base, winners, spark, from_datum, to_datum, z_col, flips,
         allow_points_outside_coverage, include_uncertainty,
         include_lineage, key_col, dz_corr,
     ))
@@ -544,62 +545,59 @@ def _finalize(
     spark: SparkSession,
     from_datum: str,
     to_datum: str,
-    z: Column,
+    z_col: str,
     flips: tuple[float, float],
     allow_points_outside_coverage: bool,
     include_uncertainty: bool,
     include_lineage: bool,
     key_col: str,
-    dz_corr: Column | None = None,
+    dz_corr: str | None = None,
 ) -> DataFrame:
     """Attach winners back to the driving table (no-op for the
     passthrough strategy, which already carries them) and apply the
     output contracts: F1 coverage, F4 flip matrix, F5 round(3),
-    F6 CATZOC, J6 unc, output-frame z-correction (core.py:443-444)."""
+    F6 CATZOC, J6 unc, output-frame z-correction (core.py:443-444).
+    One projection of SQL-text columns; ``dz_corr`` is SQL text."""
     out = base.join(winners, key_col, "left") if winners is not None else base
     # NaN-vs-NULL: Arrow maps pandas NaN to NULL, but guard both
-    covered = F.col("sep").isNotNull() & ~F.isnan(F.col("sep"))
-    fin, fout = F.lit(flips[0]), F.lit(flips[1])
-    z_h = fin * z  # input z in height (positive-up) convention
-    corr = dz_corr if dz_corr is not None else F.lit(0.0)
-    z_covered = F.round(fout * (z_h + F.col("sep") + corr), 3)
-
+    covered = "((sep IS NOT NULL) AND (NOT isnan(sep)))"
+    fout = _d(flips[1])
+    z_h = f"({_d(flips[0])} * {sql_ident(z_col)})"  # height-convention z
+    corr = dz_corr if dz_corr is not None else "0.0D"
+    z_covered = f"round({fout} * (({z_h} + sep) + {corr}), 3)"
     if allow_points_outside_coverage:
-        z_out = F.when(covered, z_covered).otherwise(F.round(fout * z_h, 3))
+        z_out = (f"CASE WHEN {covered} THEN {z_covered} "
+                 f"ELSE round({fout} * {z_h}, 3) END")
     else:
-        z_out = F.when(covered, z_covered)
-    out = out.withColumn("z_out", z_out).withColumn("covered", covered)
+        z_out = f"CASE WHEN {covered} THEN {z_covered} END"
+    cols = {"z_out": z_out, "covered": covered}
 
     if include_uncertainty:
         # literal CASE over the (tiny) catalog instead of a broadcast
         # join (r6): same per-region combined_sigma doubles, same
         # left-join-miss null for uncovered rows, one less broadcast
         # exchange + dim build per transform query (guide §2.4)
-        unc_case = None
-        for r in catalog.REGIONS:
-            v = F.lit(float(catalog.combined_sigma(r.region_id, to_datum)))
-            unc_case = (
-                F.when(F.col("region_id") == r.region_id, v)
-                if unc_case is None
-                else unc_case.when(F.col("region_id") == r.region_id, v)
-            )
-        if unc_case is None:
-            unc_case = F.lit(None).cast("double")
-        out = out.withColumn("unc", unc_case)
+        whens = " ".join(
+            f"WHEN (region_id = {sql_str(r.region_id)}) "
+            f"THEN {_d(catalog.combined_sigma(r.region_id, to_datum))}"
+            for r in catalog.REGIONS
+        )
+        unc = f"CASE {whens} END" if whens else "CAST(NULL AS DOUBLE)"
         if allow_points_outside_coverage:
             # F6: CATZOC-D vertical uncertainty over the HEIGHT-axis z
             # (raster.py:384-390 negates a sounding input first)
-            catzoc = F.when(z_h > 0, F.lit(3.0)).otherwise(
-                F.lit(3.0) - F.lit(0.06) * z_h
-            )
-            out = out.withColumn("unc", F.when(covered, F.col("unc")).otherwise(catzoc))
+            catzoc = (f"CASE WHEN ({z_h} > 0) THEN 3.0D "
+                      f"ELSE (3.0D - (0.06D * {z_h})) END")
+            cols["unc"] = f"CASE WHEN {covered} THEN {unc} ELSE {catzoc} END"
         else:
-            out = out.withColumn("unc", F.when(covered, F.col("unc")))
+            cols["unc"] = f"CASE WHEN {covered} THEN {unc} END"
+    out = out.withColumns({name: F.expr(e) for name, e in cols.items()})
 
     if include_lineage:
         dim = region_dim_df(spark, from_datum, to_datum)
         out = out.join(
-            F.broadcast(dim.select("region_id", "pipeline_str")), "region_id", "left"
+            F.broadcast(dim.selectExpr("region_id", "pipeline_str")),
+            "region_id", "left",
         )
 
     return out

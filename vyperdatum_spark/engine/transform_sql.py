@@ -7,7 +7,13 @@ exact point-in-polygon, per-step bilinear interpolation, ordered step
 sum, last-write-wins precedence — is expressed as Catalyst column
 expressions and broadcast hash joins. No Python worker, no Arrow
 socket crossing, no shuffle: one whole-stage-codegen pass over the
-driving table.
+driving table. The broadcast dims are built on the driver as Arrow
+local relations (``session.local_frame``), so their broadcast is a
+``LocalTableScan`` collect — no pickled RDD, no Python worker.
+
+The plan itself is built from SQL text (``selectExpr`` / ``F.expr``):
+a Column-DSL operator costs about 14 py4j round trips to construct,
+an ``F.expr`` about 3, whatever the size of the string.
 
 Why this exists (measured on this box, 2M-row job):
 - the mapInArrow kernel moves every heavy column (html/text) through
@@ -50,8 +56,9 @@ edge fill (J8) joins precomputed candidate nodes onto the corner rows.
 Catalogs whose literal PIP CASE exceeds the codegen budget
 (sql_strategy_within_budget) route to the broadcast kernel instead.
 
-Every catalog value spliced into SQL text goes through :func:`sql_str`;
-double literals through :func:`_d`.
+Every catalog value spliced into SQL text goes through :func:`sql_str`,
+every caller column name through :func:`sql_ident`; double literals
+through :func:`_d`.
 
 Reference parity: region loop core.py:421-453, PROJ-inf coverage
 semantics core.py:445-446, bilinear grid sampling core.py:283-311.
@@ -63,11 +70,12 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datums import catalog, pipeline as pl
 from ..grids import tiler
+from ..session import local_frame
 from ..spatial import cells, pip
 
 
@@ -302,8 +310,7 @@ def knn_cells_pdf(grids: dict, max_candidates: int = 64):
                     ],
                 })
     # plain row tuples, NOT a pandas frame (pandas None-padding would
-    # coerce ints to float64, rejected by the non-Arrow
-    # createDataFrame path under plain spark-submit). Candidates ride
+    # coerce the int columns to float64). Candidates ride
     # in ONE array<struct> column: resolving 4 attributes per join
     # instead of 4·C keeps Catalyst analysis time flat in C (a 24-col
     # variant cost ~8 s of driver-side analysis per query build).
@@ -334,6 +341,13 @@ def _d(v: float) -> str:
     """SQL double literal (the D suffix keeps the parser off DECIMAL,
     which would change the arithmetic; repr() round-trips exactly)."""
     return f"{float(v)!r}D"
+
+
+def sql_ident(name: str) -> str:
+    """SQL identifier: backtick-quoted with embedded backticks doubled,
+    so a caller column name (``lon-deg``, ``my col``) parses as one
+    column reference."""
+    return "`" + str(name).replace("`", "``") + "`"
 
 
 def sql_str(v: str) -> str:
@@ -523,31 +537,15 @@ def slots_dim_pdf(grids: dict, j_max: int) -> tuple[pd.DataFrame, str, int]:
     return merged, ", ".join(schema), depth
 
 
-def _py(v):
-    """``v`` with every numpy scalar made a Python scalar, recursing
-    into lists (arrays) and tuples (structs): the non-Arrow
-    createDataFrame path under plain spark-submit rejects np.int64."""
-    if isinstance(v, np.generic):
-        return v.item()
-    if isinstance(v, list):
-        return [_py(x) for x in v]
-    if isinstance(v, tuple):
-        return tuple(_py(x) for x in v)
-    return v
-
-
-def _py_rows(pdf: pd.DataFrame) -> list[tuple]:
-    """Plain-python row tuples (no numpy scalars at any depth)."""
-    return [_py(tup) for tup in pdf.itertuples(index=False, name=None)]
-
-
 def _dims(spark: SparkSession, from_datum: str, to_datum: str,
           grid_defs=None, knn_fallback: bool = False,
           grid_cache_token: str | None = None):
     """Broadcast-dimension DataFrames cached per (session, catalog
     version, datum pair): the grid working set is immutable for a
-    catalog version (the PROJ-grid-cache analog), and rebuilding the
-    pandas→Spark dims cost ~0.3-0.5 s of fixed driver time per query.
+    catalog version (the PROJ-grid-cache analog), so the numpy/pandas
+    dim build runs once per key. The dims are Arrow local relations
+    (``session.local_frame``): each query's broadcast collects a
+    ``LocalTableScan`` inside the JVM, with no Python worker.
 
     Caller-supplied ``grid_defs`` (runtime grids) bypass the cache
     UNLESS the caller also passes ``grid_cache_token`` — a promise
@@ -571,12 +569,13 @@ def _dims(spark: SparkSession, from_datum: str, to_datum: str,
     grids = combined_grids(from_datum, to_datum, grid_defs)
     j_max = max((len(g) for g in grids.values()), default=0)
     slots_merged, slots_schema, depth = slots_dim_pdf(grids, j_max)
-    slots = spark.createDataFrame(_py_rows(slots_merged), slots_schema)
+    slots = local_frame(
+        spark, slots_merged.itertuples(index=False, name=None), slots_schema)
     corner_schema = (
         "gkey string, ix long, iy long, "
         "v00 double, v01 double, v10 double, v11 double"
     )
-    cpdf = corners_pdf(grids)
+    corner_rows = corners_pdf(grids).itertuples(index=False, name=None)
     if knn_fallback:
         # r6 plan slimming: the kNN candidate cells ride ON the corner
         # rows (outer-merged by (gkey, ix, iy) — exterior-ring cells
@@ -587,18 +586,16 @@ def _dims(spark: SparkSession, from_datum: str, to_datum: str,
         knn_js = {int(r[0].rsplit("#g", 1)[1]) for r in knn_rows}
         by_cell = {(g, int(ix), int(iy)): cands
                    for g, ix, iy, cands in knn_rows}
-        rows = []
-        for tup in _py_rows(cpdf):
-            g, ix, iy = tup[0], tup[1], tup[2]
-            rows.append(tup + (_py(by_cell.pop((g, ix, iy), None)),))
-        for (g, ix, iy), cands in by_cell.items():
-            rows.append((g, ix, iy, None, None, None, None, _py(cands)))
+        rows = [tup + (by_cell.pop((tup[0], int(tup[1]), int(tup[2])), None),)
+                for tup in corner_rows]
+        rows += [(g, ix, iy, None, None, None, None, cands)
+                 for (g, ix, iy), cands in by_cell.items()]
         corner_schema += (", cands array<struct<lon: double, lat: double, "
                           "v: double, i: bigint>>")
-        corners = spark.createDataFrame(rows, corner_schema)
+        corners = local_frame(spark, rows, corner_schema)
     else:
         n_cand, knn_js = 0, set()
-        corners = spark.createDataFrame(_py_rows(cpdf), corner_schema)
+        corners = local_frame(spark, corner_rows, corner_schema)
     out = (slots, corners, depth, j_max, n_cand, knn_js)
     if cacheable:
         # bounded LRU, NOT evict-by-foreign-appId: a driver process can
@@ -642,50 +639,50 @@ def transform_points_sql(
       grid_defs      — caller-supplied runtime grids (tiler.GridDef
                        list), replacing the catalog fixture set.
     """
-    x, y = F.col(x_col), F.col(y_col)
     slots, corners, depth, j_max, n_cand, knn_js = _dims(
         spark, from_datum, to_datum, grid_defs, knn_fallback,
         grid_cache_token,
     )
+    xs, ys = sql_ident(x_col), sql_ident(y_col)
+    cols = points.columns
+    if any(c.lower() == "cell5" for c in cols):
+        # recomputed below, replacing the caller's (withColumn semantics)
+        points = points.drop("cell5")
+        cols = [c for c in cols if c.lower() != "cell5"]
 
-    out = points.withColumn("cell5", cells.encode_col(x, y, cells.COARSE_RES))
-    out = out.withColumn("_c9", cells.encode_col(x, y, cells.FINE_RES))
+    out = points.selectExpr(
+        "*",
+        f"{cells.encode_sql(xs, ys, cells.COARSE_RES)} AS cell5",
+        f"{cells.encode_sql(xs, ys, cells.FINE_RES)} AS _c9",
+    )
     # ONE denormalized prune join (slots_dim_pdf): rid/ord/ngr + lattice
     # params for every slot arrive together — the per-slot region-dim
     # joins of the two-level layout are gone (r6, guide §2.4: fewer
-    # broadcast exchanges, flatter join tree for Catalyst).
-    out = out.join(F.broadcast(slots), out["_c9"] == slots["cell9"], "left")
-    out = out.drop("cell9")
+    # broadcast exchanges, flatter join tree for Catalyst). Join keys
+    # are unbound names, NOT out[...]: Dataset.col() resolves against
+    # the ANALYZED plan, so a bound reference inside the loop below
+    # re-analyzes the whole growing join tree once per iteration —
+    # O(joins²) driver time (measured ~8 s of the 12.5 s geo_knn_edge
+    # wall). cell9 and the dims' other columns leave at the final
+    # projection.
+    out = out.join(F.broadcast(slots), F.expr("_c9 = cell9"), "left")
 
     # ----- joins: combined-grid corners (+ kNN candidates) per slot --
     for k in range(depth):
-        sfx = f"_s{k}"
         for j in range(j_max):
-            # unbound F.col, NOT out[...]: Dataset.col() resolves
-            # against the ANALYZED plan, so a bound reference inside
-            # this loop re-analyzes the whole growing join tree once
-            # per iteration — O(joins²) driver time (measured ~8 s of
-            # the 12.5 s geo_knn_edge wall).
-            ix = F.floor((x - F.col(f"lon0{sfx}_{j}")) / F.col(f"dlon{sfx}_{j}")).cast("long")
-            iy = F.floor((y - F.col(f"lat0{sfx}_{j}")) / F.col(f"dlat{sfx}_{j}")).cast("long")
+            s = f"_s{k}_{j}"
             knn_here = knn_fallback and n_cand and j in knn_js
-            cn = corners.select(
-                F.col("gkey").alias(f"g{sfx}_{j}"),
-                F.col("ix").alias(f"ix{sfx}_{j}"),
-                F.col("iy").alias(f"iy{sfx}_{j}"),
-                F.col("v00").alias(f"v00{sfx}_{j}"),
-                F.col("v01").alias(f"v01{sfx}_{j}"),
-                F.col("v10").alias(f"v10{sfx}_{j}"),
-                F.col("v11").alias(f"v11{sfx}_{j}"),
-                *([F.col("cands").alias(f"kc{sfx}_{j}")] if knn_here
-                  else []),
+            cn = corners.selectExpr(
+                f"gkey AS g{s}", f"ix AS ix{s}", f"iy AS iy{s}",
+                f"v00 AS v00{s}", f"v01 AS v01{s}",
+                f"v10 AS v10{s}", f"v11 AS v11{s}",
+                *([f"cands AS kc{s}"] if knn_here else []),
             )
-            out = out.join(
-                F.broadcast(cn),
-                (F.col(f"gkey{sfx}_{j}") == cn[f"g{sfx}_{j}"])
-                & (ix == cn[f"ix{sfx}_{j}"]) & (iy == cn[f"iy{sfx}_{j}"]),
-                "left",
-            )
+            out = out.join(F.broadcast(cn), F.expr(
+                f"(gkey{s} = g{s})"
+                f" AND (FLOOR(({xs} - lon0{s}) / dlon{s}) = ix{s})"
+                f" AND (FLOOR(({ys} - lat0{s}) / dlat{s}) = iy{s})"
+            ), "left")
 
     # ----- stage the expensive per-slot expressions as REAL columns --
     # A column referenced more than once downstream would otherwise be
@@ -713,9 +710,6 @@ def transform_points_sql(
         (k, j) for k in range(depth) for j in range(j_max)
         if knn_fallback and n_cand and j in knn_js
     ]
-    # backticks: caller-supplied column names must survive the SQL
-    # parser (`lon-deg` would otherwise parse as a subtraction)
-    xs, ys = f"`{x_col}`", f"`{y_col}`"
     if knn_pairs:
         out = out.selectExpr("*", *[
             bilinear_sql(
@@ -794,7 +788,9 @@ def transform_points_sql(
         )
     out = out.selectExpr("*", *valids)
 
-    keep = points.columns + ["cell5"]
+    # backticks: caller-supplied column names must survive the SQL
+    # parser (`lon-deg` would otherwise parse as a subtraction)
+    keep = [sql_ident(c) for c in cols] + ["cell5"]
 
     if precedence == "count":
         # W2 (raster.py:226-233): the region with the MOST valid
@@ -803,61 +799,48 @@ def transform_points_sql(
         # vector on the driver; the winner pick is then pure column
         # math with the counts as literals — the reference likewise
         # pre-scans for valid counts before stacking.
-        cnt_exprs = []
-        for r in catalog.REGIONS:
-            e = None
-            for k in range(depth):
-                term = F.when(
-                    (F.col(f"rid_s{k}") == r.region_id) & F.col(f"ok_s{k}"),
-                    1,
-                ).otherwise(0)
-                e = term if e is None else e + term
-            cnt_exprs.append(F.sum(e).alias(r.region_id))
-        crow = out.agg(*cnt_exprs).collect()[0]
-        counts = {r.region_id: int(crow[r.region_id] or 0)
-                  for r in catalog.REGIONS}
+        crow = out.selectExpr(*[
+            "sum(" + " + ".join(
+                f"(CASE WHEN ((rid_s{k} = {sql_str(r.region_id)}) AND ok_s{k})"
+                f" THEN 1 ELSE 0 END)" for k in range(depth)
+            ) + ")"
+            for r in catalog.REGIONS
+        ]).collect()[0]
+        counts = {r.region_id: int(crow[i] or 0)
+                  for i, r in enumerate(catalog.REGIONS)}
 
-        def cnt_lit(rid: Column) -> Column:
-            e = None
-            for r in catalog.REGIONS:
-                c = F.lit(counts[r.region_id]).cast("long")
-                e = (F.when(rid == r.region_id, c) if e is None
-                     else e.when(rid == r.region_id, c))
-            return e
+        def cnt_lit(rid: str) -> str:
+            whens = " ".join(
+                f"WHEN ({rid} = {sql_str(r.region_id)}) "
+                f"THEN CAST({counts[r.region_id]} AS BIGINT)"
+                for r in catalog.REGIONS
+            )
+            return f"CASE {whens} END"
 
-        slot_structs = []
-        for k in range(depth):
-            sfx = f"_s{k}"
-            slot_structs.append(F.when(
-                F.col(f"ok{sfx}"),
-                F.struct(
-                    cnt_lit(F.col(f"rid{sfx}")).alias("c"),
-                    F.col(f"ord{sfx}").alias("o"),
-                    F.col(f"rid{sfx}").alias("r"),
-                    F.col(f"tot{sfx}").alias("t"),
-                ),
-            ))
-        w = (F.greatest(*slot_structs) if len(slot_structs) > 1
+        slot_structs = [
+            f"CASE WHEN ok_s{k} THEN named_struct('c', {cnt_lit(f'rid_s{k}')}, "
+            f"'o', ord_s{k}, 'r', rid_s{k}, 't', tot_s{k}) END"
+            for k in range(depth)
+        ]
+        w = (f"greatest({', '.join(slot_structs)})" if len(slot_structs) > 1
              else slot_structs[0])
-        out = out.select("*", w.alias("_w2"))
-        return out.select(
-            *keep,
-            F.col("_w2.r").alias("region_id"),
-            F.col("_w2.o").cast("int").alias("region_ord"),
-            F.col("_w2.t").alias("sep"),
+        out = out.selectExpr("*", f"{w} AS _w2")
+        return out.selectExpr(
+            *keep, "_w2.r AS region_id", "CAST(_w2.o AS INT) AS region_ord",
+            "_w2.t AS sep",
         )
 
     # ----- W1 winner: slots are ord-ascending, so last-write-wins =
     # first valid slot scanning DESCENDING
-    def pick(col_fmt: str) -> Column:
-        return F.coalesce(*[
-            F.when(F.col(f"ok_s{k}"), F.col(col_fmt.format(k=k)))
+    def pick(col: str) -> str:
+        return "coalesce(" + ", ".join(
+            f"CASE WHEN ok_s{k} THEN {col}_s{k} END"
             for k in reversed(range(depth))
-        ])
+        ) + ")"
 
-    return out.select(
+    return out.selectExpr(
         *keep,
-        pick("rid_s{k}").alias("region_id"),
-        pick("ord_s{k}").cast("int").alias("region_ord"),
-        pick("tot_s{k}").alias("sep"),
+        f"{pick('rid')} AS region_id",
+        f"CAST({pick('ord')} AS INT) AS region_ord",
+        f"{pick('tot')} AS sep",
     )

@@ -98,38 +98,6 @@ def _bucketed_grams(df: DataFrame, target_filter: Column, id_col: str,
     )
 
 
-def train_lambdas(df: DataFrame, target_filter: Column,
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> list[float]:
-    """One explode+agg pass over the corpus → the 64 per-bucket
-    log-importance weights ln(p̂_target(b) / p̂_raw(b)), add-one
-    smoothed.  Buckets unseen in either distribution get the smoothed
-    prior ratio."""
-    bk = _bucketed_grams(df, target_filter, id_col, text_col)
-    return _lambdas_from_buckets(bk)
-
-
-def _lambdas_from_buckets(bk: DataFrame) -> list[float]:
-    rows = (
-        bk.groupBy("b")
-        .agg(F.count(F.lit(1)).alias("r"), F.sum("is_t").alias("t"))
-        .collect()
-    )
-    r = [0] * N_BUCKETS
-    t = [0] * N_BUCKETS
-    for row in rows:
-        r[row["b"]] = int(row["r"])
-        t[row["b"]] = int(row["t"])
-    rr, tt = sum(r), sum(t)
-    return [
-        math.log(
-            ((t[b] + 1.0) / (tt + N_BUCKETS))
-            / ((r[b] + 1.0) / (rr + N_BUCKETS))
-        )
-        for b in range(N_BUCKETS)
-    ]
-
-
 def dsir_weights(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text",
                  target_lang: str = "en") -> DataFrame:

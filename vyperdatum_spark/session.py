@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -83,3 +83,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A DataFrame over driver-held row tuples, built from an Arrow
+    table: Spark plans it as a ``LocalRelation`` (``LocalTableScan``),
+    so broadcasting it or scanning it runs no Python worker and ships
+    nothing through a pickled RDD. A table past
+    ``spark.sql.execution.arrow.localRelationThreshold`` falls back to
+    Spark's own Arrow-batch scan. Values may be numpy scalars at any
+    depth; float NaN stays NaN (only ``None`` becomes null)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)

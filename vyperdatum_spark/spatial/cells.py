@@ -17,10 +17,16 @@ in four equivalent forms used throughout the repo:
 
 - numpy (tiler, kernels, test oracles)          -> :func:`encode_np`
 - Spark Column (JVM-side, whole-stage codegen)  -> :func:`encode_col`
-- ANSI SQL text (DuckDB correctness oracles)    -> :func:`encode_sql`
+- ANSI SQL text (the SQL transform's plan text,
+  DuckDB correctness oracles)                   -> :func:`encode_sql`
 - scalar Python (driver-side covers)            -> :func:`encode_one`
 
-All four are bit-identical by construction; tests assert it.
+On finite coordinates all four are bit-identical by construction;
+tests assert it. Non-finite input is where they part: ``encode_np``
+maps NaN to -1 and ``encode_one`` raises, while the two Spark forms
+agree with each other — FLOOR(NaN) casts to 0, so a NaN longitude
+lands in column 0 (at res 5 and latitude 0: 1441151880758558752) —
+and a null coordinate gives a null cell.
 
 Replaces: the reference has no spatial index at all (it loops region
 files and lets PROJ grid I/O resolve coverage — core.py:86-158,
@@ -76,7 +82,8 @@ def encode_col(lon: Column, lat: Column, res: int) -> Column:
 
 
 def encode_sql(lon_sql: str, lat_sql: str, res: int) -> str:
-    """Same arithmetic as ANSI SQL text (DuckDB oracle side)."""
+    """Same arithmetic as ANSI SQL text: the SQL transform's cell
+    encodes and the DuckDB oracles both use it."""
     sz = repr(cell_size_deg(res))
     return (
         f"((CAST({res} AS BIGINT) << 58)"

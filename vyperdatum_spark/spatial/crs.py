@@ -10,8 +10,9 @@ closed-form projection formulas (Snyder, "Map Projections — A Working
 Manual"), each in THREE equivalent dialects like the cell index:
 
 - Spark Column expressions (JVM, whole-stage codegen — the hot path),
-- numpy (test oracles),
-- ANSI SQL text (DuckDB correctness oracles).
+- numpy (test oracles; the frame δz and the forward direction),
+- ANSI SQL text (DuckDB correctness oracles, and the transform's
+  frame δz and output x/y).
 
 Registry:
 - ``nad83s``   — geographic lon/lat in the geoid frame (identity).
@@ -119,27 +120,6 @@ def to_geoid_frame_cols(crs: str, x: Column, y: Column, z: Column):
     lon = x + F.lit(FR_DLON)
     lat = y + F.lit(FR_DLAT)
     return lon, lat, z + frame_dz_cols(lon, lat)
-
-
-def to_geoid_frame_np(crs: str, x, y, z):
-    crs = validate_crs(crs)
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    z = np.asarray(z, dtype=np.float64)
-    if crs == "nad83s":
-        return x, y, z
-    if crs == "spcs_syn":
-        return (PC_LON0 + (x - PC_E0) / PC_KX,
-                PC_LAT0 + (y - PC_N0) / PC_KY, z)
-    if crs == "utm_syn":
-        xs = (x - TM_E0) / (TM_K0 * R)
-        ys = y / (TM_K0 * R)
-        lon = TM_LON0 + np.arctan(np.sinh(xs) / np.cos(ys)) / DEG
-        lat = np.arcsin(np.sin(ys) / np.cosh(xs)) / DEG
-        return lon, lat, z
-    lon = x + FR_DLON
-    lat = y + FR_DLAT
-    return lon, lat, z + frame_dz_np(lon, lat)
 
 
 def to_geoid_frame_sql(crs: str, x: str, y: str, z: str):
